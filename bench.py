@@ -2,8 +2,10 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <scale factor>,
-   "n": <runs per query>, "deltas_vs_prev": {name: ratio, ...}}
+   "queries": {name: sec, ...}, "extended_queries": {name: sec, ...},
+   "errors": {name: msg}, "sf": <scale factor>, "n": <runs per query>,
+   "sessions": k, "session_core_totals": [...],
+   "session_agreement_raw": max/min of those totals}
 
 Each query executes end-to-end via the noop sink (full plan runs on the
 cluster, no driver-side result transfer skewing the timing). Session
@@ -11,61 +13,44 @@ startup and the warmup run are excluded. Each query is timed
 $SPARK_GRAFT_BENCH_N times (default 5) in round-robin passes — order
 bias and GC spikes average out — and the reported number is the
 per-query MEDIAN, so run-to-run noise can't masquerade as a
-regression. ``deltas_vs_prev`` is this run / the latest committed
-BENCH_r*.json per query (>1 = slower than last round);
-``deltas_calib_normalized`` divides that by the calibration-probe drift
-so machine-speed changes don't read as plan regressions.
+regression. Wall time on this kind of host drifts 2-3x between runs,
+so compare two trees only with same-session A/B runs, never against a
+number recorded earlier.
 
-CROSS-SESSION PROTOCOL (round 15): the whole battery runs in
+CROSS-SESSION PROTOCOL: the whole battery runs in
 $SPARK_GRAFT_BENCH_SESSIONS (default 2) FRESH OS-process Spark sessions
-and every reported timing is the median across session medians. Two
-same-fingerprint single-session runs of the r14 bench disagreed 0.950x
-vs 1.158x on the normalized core total — entirely on sub-second queries
-— because JIT state, GC cadence and thread layout are session-level
-effects no within-session median can remove. The artifact carries
-per-session core totals plus ``session_agreement_raw``/``_norm``
-(max/min across sessions); per-round >=1.2x claims are supportable only
-when the agreement ratio is materially tighter than the claimed effect.
-Set SPARK_GRAFT_BENCH_SESSIONS=1 for the old single-session behavior.
+and every reported timing is the median across session medians. JIT
+state, GC cadence and thread layout are session-level effects no
+within-session median can remove (two single-session runs of the same
+tree disagreed 0.950x vs 1.158x on the core total, entirely on
+sub-second queries). The line carries per-session core totals plus
+``session_agreement_raw`` (max/min across sessions); a >=1.2x claim is
+supportable only when the agreement ratio is materially tighter than
+the claimed effect. Set SPARK_GRAFT_BENCH_SESSIONS=1 for a single
+session.
 
-CROSS-ROUND INDEX (round 10): prev-chained normalized deltas whipsawed
-(r8 read 0.62-0.98, r9 read 1.3-2.2, truth flat) because the drift
-scalar was the battery-TOTAL ratio, 75% of which was the one probe
-that misbehaved. Now (a) drift scalars are the MEDIAN of per-probe
-ratios, and (b) every round also emits ``index_raw_vs_epoch`` /
-``index_norm_vs_epoch`` against the pinned round-7 anchors (EPOCH_*
-constants below), so any two rounds compare directly and mirror-image
-rounds cancel. Decision rule (also in README): when
-``calib_drift_vs_epoch`` is within [0.7, 1.4] the machines are
-comparable for these ~1 s queries (fixed scheduling overhead dominates
-and does not move with probe-measured compute speed) — judge
-regressions on the RAW index; outside the band use the normalized one.
+$SPARK_GRAFT_BENCH_OUT names a file to write the full line to, plus a
+``__meta__`` provenance stamp; the run refuses to start when that file
+already exists.
 
 Fault isolation: every query runs under try/except — a red query lands
 in ``errors`` with its exception and the rest of the suite still times
-and reports (a bench artifact with zero timings because one query threw
+and reports (a bench line with zero timings because one query threw
 is worse than a partial one).
 
-METHODOLOGY CHANGE (round 7): the block-manager cache is evicted after
-every timed run (``methodology: evict-per-run`` in the artifact).
-Queries whose operators persist reused frames internally (x7's
-shingles, x13's bucketed index, x29's signature frames, x34b's tf,
-h1/h4/h5's graph frames) previously had passes 2..n read those frames
-from the pass-1 cache, UNDERSTATING their per-run cost (x7 measured
-1.04 s with reuse vs 2.64 s honest at sf0.1) — a real user runs the
-query once and pays the full plan. Their round-7 ``deltas_vs_prev``
-therefore read high against the flattered r6 numbers; queries without
-internal persists are unaffected (A/B-measured noise-level delta).
-The leak also compounded across the ~30-query session and degraded
-late-running queries — the same hygiene fix as tools/scaling.py.
+The block-manager cache is evicted after every timed run
+(``methodology: evict-per-run``). Queries whose operators persist
+reused frames internally (x7's shingles, x13's bucketed index, x29's
+signature frames, x34b's tf, h1/h4/h5's graph frames) would otherwise
+read those frames from the pass-1 cache in passes 2..n, understating
+their per-run cost (x7 measured 1.04 s with reuse vs 2.64 s honest at
+sf0.1) — a real user runs the query once and pays the full plan.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import statistics
 import sys
 import time
@@ -76,83 +61,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from insect_observation_data_pipeline_spark import get_spark
 from insect_observation_data_pipeline_spark.queries import QUERIES
 
-# NOTE on x7_minhash_lsh's r6->r7 "regression" (round-7 verdict
-# follow-up): demonstrated to be PURE methodology, by A/B at sf0.1
-# (round 8): under the old warm protocol x7 medians 0.99 s (r6
-# recorded 1.39 — it got FASTER), under evict-per-run it medians
-# 2.98 s (r7 recorded 3.48 on a colder pass). x7 rebuilds its two
-# MEMORY_AND_DISK shingle/signature persists inside every evicted run
-# (llm/dedup.py:704,718), which is the honest per-invocation cost; the
-# warm number is what a session that already built them sees.
-
-# EPOCH anchor for the cross-round-comparable index (round 10, fixing
-# the calibration whipsaw the round-9 verdict flagged: normalizing by
-# the SORT-DOMINATED battery-total ratio read r8 as 0.62-0.98 and r9 as
-# 1.3-2.2 while the truth was flat). Two changes:
-#   1. drift scalars are now the MEDIAN of the per-probe ratios, not
-#      the battery-total ratio (the sort probe was 75% of calib_sec and
-#      whipsawed 2.6x between rounds while codegen/shuffle moved ~25%);
-#   2. every round emits an index against ONE fixed epoch — round 7's
-#      committed artifact, hand-pinned below — so mirror-image
-#      prev-chained rounds cancel and any two rounds compare directly.
-# Caveat the index inherits: the probes model COMPUTE, but most core
-# queries are ~1 s at sf0.1 where fixed job-scheduling + noop-commit
-# overhead dominates and does NOT move with compute speed — so when
-# calib_drift_vs_epoch is within [0.7, 1.4] judge regressions on
-# index_raw_vs_epoch; outside that band prefer index_norm_vs_epoch.
-EPOCH_SRC = "BENCH_r07.json"
-EPOCH_CALIB_OPS = {"codegen": 0.091, "shuffle": 0.351, "sort": 1.313}
-EPOCH_QUERIES = {
-    "q1_pricing_summary": 0.676,
-    "q3_shipping_priority": 0.858,
-    "q5_local_supplier_volume": 1.192,
-    "flagship_top_part_supplier": 1.091,
-    "a8_top_nation_months": 0.751,
-    "w2_best_month_per_customer": 2.67,
-    "a7_distinct_on_first_line": 1.09,
-    "j9_interval_attribution": 0.543,
-    "s8_quarantine_events": 0.493,
-    "x1_dedup_exact": 0.361,
-    "x7_minhash_lsh": 3.475,
-    "x8_simhash": 1.363,
-    "x9_ann_bruteforce": 0.677,
-    "e2_sessionization": 0.62,
-}
-
-# EPOCH_CHAIN: re-base links for the README's epoch re-anchoring policy
-# (round-13 scaffolding, VERDICT r12 #3). When calib_drift_vs_epoch
-# leaves [0.5, 2.0] two rounds running, append ONE dict here —
-#   {"round": N, "calib_factor": c, "query_factor": q}
-# where c = median per-op ratio (new round's calib_ops / the CHAINED
-# epoch calib at that point) and q = the same-set query-total ratio
-# (new round's epoch-common total / chained epoch total) measured at
-# the re-base round — and the index computation multiplies the pinned
-# round-7 anchors through every link. Re-basing is then a DATA-only
-# change: the chain records the conversion, EPOCH_* stay untouched,
-# and any two rounds still compare through the composed factors.
-EPOCH_CHAIN: list[dict] = []
-
-
-def chained_epoch() -> tuple[dict, dict]:
-    """The round-7 epoch anchors multiplied through every EPOCH_CHAIN
-    link: (calib_ops, query_seconds) in the CURRENT regime's units."""
-    calib = dict(EPOCH_CALIB_OPS)
-    queries = dict(EPOCH_QUERIES)
-    for link in EPOCH_CHAIN:
-        c = link["calib_factor"]
-        q = link.get("query_factor", c)
-        calib = {op: v * c for op, v in calib.items()}
-        queries = {n: v * q for n, v in queries.items()}
-    return calib, queries
-
-
-# NOTE on x1_dedup_exact "drift" (round-6 verdict follow-up): x1 is
-# ~85% fixed overhead at this scale — measured r7: 0.345 s at sf0.01
-# vs 0.405 s at sf0.1, i.e. 10x the data costs +17% — so its wall
-# clock tracks job-scheduling + noop-commit latency, not the plan (a
-# single hash-agg over one scan). Its per-round deltas are therefore
-# scheduling noise; the r6 "normalized 1.258" figure was additionally
-# inflated by the _prev_bench bug that compared r6 against round 3.
+# x1_dedup_exact is ~85% fixed overhead at this scale (0.345 s at
+# sf0.01 vs 0.405 s at sf0.1): its wall clock tracks job-scheduling +
+# noop-commit latency, not the plan (a single hash-agg over one scan).
 BENCH_QUERIES = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -170,17 +81,8 @@ BENCH_QUERIES = [
     "e2_sessionization",
 ]
 
-# NOTE on the seven extended-query upticks the round-12 verdict flagged
-# (x15, x31, x19, x13, x38, x34b, x33 — 1.07-1.17x raw on r12's faster
-# machine): confirmed noise in round 13. Raw r13/r12: x15 0.93,
-# x31 0.92, x33 0.93, x38 0.98 (all FASTER), x13 1.05, x34b 1.08,
-# x19 1.09 — the three positives sit inside a calibration whose per-op
-# probes moved +20%/-22% in opposite directions (codegen 1.197,
-# shuffle 0.785 vs prev), i.e. well under the machine's own spread.
-# x19's <2-token guard was additionally hoisted to a pre-explode row
-# filter in round 13, removing the per-row when() branch it carried.
-# round-3+ operators, timed separately so the headline total stays
-# comparable across rounds (same 14-query set since round 1)
+# operators added after the headline set, timed separately so the
+# headline total keeps the same 14 queries
 EXTENDED_QUERIES = [
     "x11_dedup_embedding",
     "x13_ann_lsh_multiprobe",
@@ -287,226 +189,6 @@ def run_once_clean(spark, df) -> None:
         spark.catalog.clearCache()
 
 
-def calibration_battery(spark, n_runs: int = 3) -> dict[str, float]:
-    """Per-op median wall-clock of a FIXED 3-op micro-battery — the
-    machine-drift probe behind ``deltas_calib_normalized``. Query
-    timings on a shared host move with CPU steal / frequency drift;
-    these numbers move with them, so cross-round comparisons can
-    separate machine-speed drift from genuine plan regressions: if
-    every query's delta matches the calibration delta, the machine
-    changed, not the code.
-
-    Four ops so the probe covers the cost regimes a query mixes
-    (a single op was too thin to settle drift questions — round-5
-    verdict): ``codegen`` = whole-stage-codegen arithmetic (identical
-    to the pre-round-6 single probe, so the series stays comparable),
-    ``shuffle`` = hash exchange + agg, ``sort`` = range exchange +
-    sort, and (round 10) ``sched`` = a 64-task no-compute job + noop
-    commit — the FIXED job-scheduling overhead that dominates the ~1 s
-    core queries at sf0.1 and does NOT move with compute speed (the
-    round-10 local run measured compute drift 0.97 vs epoch while
-    every query ran ~1.3x the epoch wall-clock — a scheduling-regime
-    machine difference the compute probes cannot see). ``sched`` is
-    reported in ``calib_ops`` for cross-round diagnosis; the drift
-    MEDIANS exclude it automatically against artifacts that predate it
-    (key intersection) and the epoch constants pin only the original
-    three. No I/O in any probe."""
-    ops = {
-        "codegen": spark.range(200_000_000).selectExpr("sum(id) AS s"),
-        "shuffle": (
-            spark.range(20_000_000)
-            .selectExpr("id % 1000 AS k")
-            .groupBy("k")
-            .count()
-        ),
-        "sort": (
-            spark.range(20_000_000)
-            .selectExpr("(id * 2654435761) % 16777216 AS k")
-            .orderBy("k")
-        ),
-        "sched": spark.range(1_000).repartition(64),
-    }
-    out = {}
-    for name, df in ops.items():
-        run_once(df)  # warm
-        samples = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            run_once(df)
-            samples.append(time.time() - t0)
-        out[name] = round(statistics.median(samples), 3)
-    return out
-
-
-_NUMPAIR = re.compile(r'"([A-Za-z0-9_]+)": ([0-9][0-9.eE+-]*)')
-
-
-def _parse_bench_line(line: str) -> dict:
-    """Best-effort parse of one bench JSON line that may be
-    FRONT-truncated (the driver's ``tail`` capture keeps only the last
-    2000 chars, so the head of the line — typically through the first
-    entries of ``queries`` — is cut off). Strategy: try a clean parse;
-    failing that, cut at each quote position and take the first cut
-    whose remainder parses as a top-level object (cuts inside a nested
-    dict fail with "Extra data", so the first success is exactly the
-    first surviving top-level key), then salvage whole ``"name":
-    number`` pairs from the truncated prefix — those belong to the
-    dict the cut landed inside, attached as ``queries`` only when they
-    look like bench query names."""
-    line = line.strip()
-    if not line.endswith("}"):
-        return {}
-    try:
-        d = json.loads(line)
-        return d if isinstance(d, dict) else {}
-    except json.JSONDecodeError:
-        pass
-    for m in re.finditer(r'"', line):
-        i = m.start()
-        try:
-            cand = json.loads("{" + line[i:])
-        except json.JSONDecodeError:
-            continue
-        if not isinstance(cand, dict):
-            continue
-        if "queries" not in cand:
-            prefix = line[:i]
-            cut = prefix.rfind("}")
-            pairs = {
-                k: float(v)
-                for k, v in _NUMPAIR.findall(prefix[: cut + 1])
-            }
-            if any(k in pairs for k in BENCH_QUERIES):
-                cand["queries"] = pairs
-        return cand
-    return {}
-
-
-def _tracked_evidence_names(patterns: tuple[str, ...]) -> list[str] | None:
-    """Names of GIT-TRACKED evidence artifacts matching ``patterns``
-    (relative to the repo root), or ``None`` when git itself is
-    unavailable/failed (a non-git copy of the tree). An empty LIST is a
-    trusted answer — git ran and nothing is committed yet — and must
-    NOT trigger a filesystem fallback: an untracked stray
-    BENCH_r99.json in a fresh evidence repo would otherwise skew both
-    the artifact name and the deltas baseline (round-12 review; the
-    same threat _current_round's round-12 ADVICE fix named)."""
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        return subprocess.run(
-            ["git", "ls-files", *patterns],
-            cwd=here, capture_output=True, text=True, check=True,
-        ).stdout.split()
-    except (OSError, subprocess.CalledProcessError):
-        return None
-
-
-def _prev_bench() -> dict:
-    """Parsed JSON body of the latest committed BENCH_r*.json.
-
-    The driver wraps bench.py's JSON line under ``parsed``, but the
-    committed r4–r6 artifacts carry ``"parsed": null`` with the JSON
-    body surviving only (front-truncated) in the ``tail`` capture — so
-    when ``parsed`` is missing, recover the body from ``tail`` via
-    ``_parse_bench_line`` before falling back to an older artifact
-    (round-6 verdict: without this, every deltas_vs_prev since r4
-    silently compared to round 3 while claiming "last round"). The
-    returned dict carries ``_src`` = artifact filename so the emitted
-    ``prev_src`` makes the comparison base auditable.
-
-    Candidates come from ``git ls-files`` like _current_round's
-    (round-12 review: the ADVICE fix landed only on the artifact NAME;
-    an untracked foreign BENCH_r99.json could still silently become
-    the deltas_vs_prev baseline while ``prev_src`` claimed it was the
-    last round). Filesystem glob only for a non-git copy."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    names = _tracked_evidence_names(("BENCH_r*.json",))
-    if names is None:
-        names = [
-            os.path.basename(p)
-            for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        ]
-    # sort on the PARSED round number, not the filename: lexicographic
-    # order breaks at r100 (BENCH_r100 < BENCH_r99). Skip hits whose
-    # suffix is not numeric (e.g. a stray BENCH_rtest.json) instead of
-    # crashing on .group(None).
-    numbered = []
-    for name in names:
-        m = re.search(r"BENCH_r(\d+)\.json$", name)
-        if m:
-            numbered.append((int(m.group(1)), os.path.join(here, name)))
-    files = [p for _, p in sorted(numbered)]
-    for path in reversed(files):
-        try:
-            with open(path) as f:
-                d = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            d = {}
-        body = d if d.get("queries") else d.get("parsed") or {}
-        if not body.get("queries"):
-            for line in reversed(d.get("tail", "").splitlines()):
-                cand = _parse_bench_line(line)
-                if cand.get("queries"):
-                    body = cand
-                    break
-        src = os.path.basename(path)
-        if not body.get("queries"):
-            # belt artifact (round-14 review: BENCH_LOCAL_r{N}.json was
-            # added BECAUSE the driver capture truncates, but this
-            # consumer never read it — the tail salvage could fall back
-            # a whole round while the byte-complete same-round local
-            # capture sat committed beside the truncated file)
-            local = os.path.join(
-                os.path.dirname(path),
-                os.path.basename(path).replace("BENCH_r", "BENCH_LOCAL_r"),
-            )
-            try:
-                with open(local) as f:
-                    cand = json.load(f)
-            except (OSError, json.JSONDecodeError):
-                cand = {}
-            if cand.get("queries"):
-                body, src = cand, os.path.basename(local)
-        if body.get("queries"):
-            body["_src"] = src
-            return body
-    return {}
-
-
-def _current_round() -> int:
-    """The round this run's evidence belongs to: 1 + the newest round
-    number among the COMMITTED driver artifacts (BENCH_r*/CORRECTNESS_r*
-    are written by the driver at the END of their round, so during
-    round N the newest tracked is N-1). Used to name the full-line
-    BENCH_LOCAL_r{N}.json this process writes alongside stdout.
-
-    Tracked files via ``git ls-files`` first (round-12 ADVICE: a stale
-    or foreign BENCH_r99.json lying UNTRACKED in the checkout must not
-    silently rename the committed evidence artifact); the filesystem
-    glob is ONLY for a non-git copy of the tree (git failed), never
-    for "git ran and found nothing" — in a fresh repo with zero
-    committed artifacts the trusted answer is round 1, and falling
-    through to the glob there would reintroduce the exact skew the
-    ADVICE fix closed (round-12 review)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    names = _tracked_evidence_names(("BENCH_r*.json", "CORRECTNESS_r*.json"))
-    if names is None:
-        names = []
-        for pat in ("BENCH_r*.json", "CORRECTNESS_r*.json"):
-            names.extend(
-                os.path.basename(p)
-                for p in glob.glob(os.path.join(here, pat))
-            )
-    newest = 0
-    for p in names:
-        m = re.search(r"_r(\d+)\.json$", p)
-        if m:
-            newest = max(newest, int(m.group(1)))
-    return newest + 1
-
-
 def time_set(
     spark,
     sf_dir: str,
@@ -549,9 +231,9 @@ def time_set(
 
 
 def run_battery(sf_dir: str, n_runs: int) -> dict:
-    """One SESSION's raw measurements: core + extended timings,
-    calibration probes, errors. No derived statistics — those are
-    computed once, over the cross-session combination."""
+    """One SESSION's raw measurements: core + extended timings and
+    errors. No derived statistics — those are computed once, over the
+    cross-session combination."""
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     errors: dict[str, str] = {}
@@ -559,11 +241,9 @@ def run_battery(sf_dir: str, n_runs: int) -> dict:
     ext_timings = time_set(
         spark, sf_dir, EXTENDED_QUERIES, min(3, n_runs), errors
     )
-    calib_ops = calibration_battery(spark)
     return {
         "queries": timings,
         "extended_queries": ext_timings,
-        "calib_ops": calib_ops,
         "errors": errors,
     }
 
@@ -574,27 +254,21 @@ _WORKER_TAG = "BENCH_WORKER "
 def _session_results(sf_dir: str, n_runs: int, k: int) -> list[dict]:
     """Run the battery in ``k`` FRESH OS-process Spark sessions.
 
-    Round-15 protocol fix: two same-fingerprint single-session runs of
-    r14's bench disagreed 0.950x vs 1.158x on the normalized core total
-    — entirely on sub-second queries — because JIT state, GC cadence
+    Two single-session runs of the same tree disagreed 0.950x vs
+    1.158x on the core total — entirely on sub-second queries —
+    because JIT state, GC cadence
     and thread-pool layout are SESSION-level effects that within-session
     medians cannot average out. Each worker is a subprocess (a stopped
     SparkContext reuses its JVM, so an in-process 'new session' would
     share the very state being controlled for); the combination is the
-    per-query median across session medians, and the emitted artifact
-    carries per-session core totals + an agreement ratio so BENCH_NOTES
+    per-query median across session medians, and the emitted line
+    carries per-session core totals + an agreement ratio so speedup
     claims can cite the cross-session statistic."""
     import subprocess
 
     results = []
     for i in range(k):
-        env = {
-            **os.environ,
-            "SPARK_GRAFT_BENCH_WORKER": "1",
-            # workers never write BENCH_LOCAL — only the combined line is
-            # the artifact
-            "SPARK_GRAFT_BENCH_OUT": "",
-        }
+        env = {**os.environ, "SPARK_GRAFT_BENCH_WORKER": "1"}
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__)],
             env=env,
@@ -639,6 +313,10 @@ def main() -> None:
         print(_WORKER_TAG + json.dumps(run_battery(sf_dir, n_runs)))
         return
 
+    out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
+    if out_path and os.path.exists(out_path):
+        raise SystemExit(f"refusing to overwrite {out_path}")
+
     k = int(os.environ.get("SPARK_GRAFT_BENCH_SESSIONS", "2"))
     if k <= 1:
         sessions = [run_battery(sf_dir, n_runs)]
@@ -647,14 +325,13 @@ def main() -> None:
 
     timings = _median_merge([s["queries"] for s in sessions])
     ext_timings = _median_merge([s["extended_queries"] for s in sessions])
-    calib_ops = _median_merge([s["calib_ops"] for s in sessions])
     errors: dict[str, str] = {}
     for i, s in enumerate(sessions):
         for name, msg in s["errors"].items():
             errors.setdefault(name, f"session {i}: {msg}")
 
-    # per-session agreement diagnostics over the COMMON core queries —
-    # the statistic BENCH_NOTES' per-round claims must cite
+    # per-session agreement over the COMMON core queries — the statistic
+    # a speedup claim must cite
     core_common = [
         n for n in BENCH_QUERIES
         if all(s["queries"].get(n) for s in sessions)
@@ -663,120 +340,13 @@ def main() -> None:
         round(sum(s["queries"][n] for n in core_common), 3)
         for s in sessions
     ]
-    epoch_calib_a, _ = chained_epoch()
-    session_drifts = []
-    for s in sessions:
-        ratios = [
-            s["calib_ops"][op] / epoch_calib_a[op]
-            for op in epoch_calib_a
-            if s["calib_ops"].get(op)
-        ]
-        session_drifts.append(
-            round(statistics.median(ratios), 3) if ratios else None
-        )
-    session_norm_totals = [
-        round(t / d, 3) if d else None
-        for t, d in zip(session_core_totals, session_drifts)
-    ]
+    live = [t for t in session_core_totals if t]
+    agreement = round(max(live) / min(live), 3) if len(live) > 1 else None
 
-    def _agreement(vals):
-        live = [v for v in vals if v]
-        return round(max(live) / min(live), 3) if len(live) > 1 else None
-
-    calib = round(sum(calib_ops.values()), 3)
-    prev = _prev_bench()
-    prev_q = prev.get("queries", {})
-    deltas = {
-        name: round(timings[name] / prev_q[name], 3)
-        for name in timings
-        if prev_q.get(name)
-    }
-    # drift vs last round: MEDIAN of the per-probe ratios (round 10 —
-    # the battery-total ratio was 75% sort probe and whipsawed while
-    # codegen/shuffle moved a fraction as much; the median is robust to
-    # one probe family misbehaving). Against a pre-battery artifact,
-    # compare its single probe to our identical 'codegen' op.
-    prev_calib = prev.get("calib_sec")
-    prev_ops = prev.get("calib_ops") or {}
-    drift_ops_prev = {
-        op: round(calib_ops[op] / prev_ops[op], 3)
-        for op in calib_ops
-        if prev_ops.get(op)
-    }
-    # the COMPUTE median excludes 'sched' (round-14 review: the battery
-    # docstring promised this but the prev-round median was taken over
-    # the full intersection, so vs any r10+ artifact a scheduling-regime
-    # change — the very thing compute normalization must not absorb —
-    # shifted every normalized delta; the epoch path's 3 pinned ops
-    # already exclude it, and the full dict still goes out in
-    # calib_drift_ops_vs_prev for audit)
-    compute_prev = {op: r for op, r in drift_ops_prev.items() if op != "sched"}
-    if compute_prev:
-        calib_drift = round(
-            statistics.median(compute_prev.values()), 3
-        )
-    elif prev_calib:
-        calib_drift = round(calib_ops["codegen"] / prev_calib, 3)
-    else:
-        calib_drift = None
-    deltas_norm = (
-        {n: round(d / calib_drift, 3) for n, d in deltas.items()}
-        if calib_drift
-        else {}
-    )
-    total = round(sum(timings.values()), 3)
-    # delta over the INTERSECTION on both sides — summing all current
-    # timings against only the common previous ones would inflate the
-    # ratio whenever a query is added or recovers from an error
-    prev_total = sum(v for n, v in prev_q.items() if n in timings and v)
-    total_common = sum(v for n, v in timings.items() if prev_q.get(n))
-    total_delta = round(total_common / prev_total, 3) if prev_total else None
-    total_norm = (
-        round(total_delta / calib_drift, 3)
-        if total_delta and calib_drift
-        else None
-    )
-
-    # the cross-round-comparable EPOCH index (see EPOCH_SRC note):
-    # every round positions itself against the same pinned round-7
-    # anchors, raw and drift-normalized
-    epoch_calib, epoch_queries = chained_epoch()
-    drift_ops_epoch = {
-        op: round(calib_ops[op] / epoch_calib[op], 3)
-        for op in epoch_calib
-        if calib_ops.get(op)
-    }
-    drift_epoch = round(statistics.median(drift_ops_epoch.values()), 3)
-    index_raw = {
-        n: round(timings[n] / epoch_queries[n], 3)
-        for n in timings
-        if epoch_queries.get(n)
-    }
-    epoch_common = sum(
-        v for n, v in epoch_queries.items() if timings.get(n)
-    )
-    now_common = sum(v for n, v in timings.items() if epoch_queries.get(n))
-    index_raw_total = (
-        round(now_common / epoch_common, 3) if epoch_common else None
-    )
-    index_norm = {n: round(v / drift_epoch, 3) for n, v in index_raw.items()}
-    index_norm_total = (
-        round(index_raw_total / drift_epoch, 3) if index_raw_total else None
-    )
-
-    # Key order is deliberate: the driver's artifact keeps only the
-    # LAST 2000 chars of output, so the derived diagnostics (the long
-    # per-query delta/index dicts) come first and front-truncate, while
-    # everything the evidence chain NEEDS comes last, inside the
-    # window: the raw per-query timings + calibration (next round's
-    # _prev_bench input) and — round-11 fix for the round-10 verdict's
-    # top defect — the EPOCH-INDEX SCALARS themselves (~150 chars),
-    # which README's regression-judging rule depends on and which
-    # BENCH_r10.json truncated away when they sat at the head.
     line = json.dumps(
         {
             "metric": "headline query wall-clock, noop sink",
-            "value": total,
+            "value": round(sum(timings.values()), 3),
             "unit": "sec",
             "methodology": (
                 "evict-per-run, cross-session median"
@@ -785,75 +355,24 @@ def main() -> None:
             ),
             "sessions": len(sessions),
             "session_core_totals": session_core_totals,
-            "session_norm_core_totals": session_norm_totals,
-            "session_agreement_raw": _agreement(session_core_totals),
-            "session_agreement_norm": _agreement(session_norm_totals),
-            "total_delta_vs_prev": total_delta,
-            "total_delta_calib_normalized": total_norm,
-            "prev_src": prev.get("_src"),
-            "epoch_src": EPOCH_SRC,
-            "epoch_chain_len": len(EPOCH_CHAIN),
-            "index_raw_vs_epoch": index_raw,
-            "index_norm_vs_epoch": index_norm,
-            "deltas_vs_prev": deltas,
-            "deltas_calib_normalized": deltas_norm,
-            "calib_drift_vs_prev": calib_drift,
-            "calib_drift_ops_vs_prev": drift_ops_prev,
+            "session_agreement_raw": agreement,
             "errors": errors,
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             "n": n_runs,
-            # the LAST ~900 chars of the line — what the driver's
-            # 2000-char tail capture is guaranteed to keep — are the
-            # core timings + calibration + epoch scalars; the (longer)
-            # extended set sits just ahead and front-truncates first
             "extended_queries": ext_timings,
             "extended_total": round(sum(ext_timings.values()), 3),
             "queries": timings,
-            "calib_sec": calib,
-            "calib_ops": calib_ops,
-            "calib_drift_vs_epoch": drift_epoch,
-            "calib_drift_ops_vs_epoch": drift_ops_epoch,
-            "index_raw_vs_epoch_total": index_raw_total,
-            "index_norm_vs_epoch_total": index_norm_total,
         }
     )
     print(line)
-    # Belt to the tail-window braces: persist the FULL line as
-    # BENCH_LOCAL_r{N}.json (the CORRECTNESS_LOCAL pattern) so the
-    # complete per-query series is committed evidence regardless of
-    # what any capture truncates. N = current round, inferred as
-    # 1 + the newest committed round artifact; override with
-    # $SPARK_GRAFT_BENCH_OUT (empty string disables the write).
-    out_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT",
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            f"BENCH_LOCAL_r{_current_round():02d}.json",
-        ),
-    )
     if out_path:
-        try:
-            # the file is the printed line's dict PLUS the __meta__
-            # provenance stamp (round-12: every committed evidence
-            # artifact self-attests the tree it measured; the stdout
-            # line stays unchanged so the epoch scalars keep their
-            # end-of-tail position and the driver capture is
-            # byte-stable); repo root is already on sys.path (module
-            # import time, line 62)
-            from tools.compare import artifact_meta
+        from tools.compare import artifact_meta
 
-            data = json.loads(line)
-            data["__meta__"] = artifact_meta()
-            with open(out_path, "w") as f:
-                json.dump(data, f)
-                f.write("\n")
-        except Exception as e:  # noqa: BLE001 — the printed line is
-            # still the artifact: the stamp import (tools.compare pulls
-            # duckdb + the query registry) or the JSON round-trip can
-            # fail in ways OSError never covers (round-12 review: an
-            # ImportError here exited nonzero AFTER a fully successful
-            # benchmark, losing the artifact the except existed to save)
-            print(f"WARN: could not write {out_path}: {e}", file=sys.stderr)
+        data = json.loads(line)
+        data["__meta__"] = artifact_meta()
+        with open(out_path, "x") as f:
+            json.dump(data, f)
+            f.write("\n")
 
 
 if __name__ == "__main__":

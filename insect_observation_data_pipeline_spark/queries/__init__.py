@@ -1,24 +1,12 @@
-"""Query registry with driver-cap-aware ordering.
+"""Query registry: every registered query and its DuckDB oracle SQL.
 
-The driver correctness gate checks exactly the FIRST 50 entries of
-``queries()`` (CORRECTNESS_r01.json has rows for dict positions 0-49 and
-none past that). To get every query a driver-verified row across rounds
-despite the cap, the ordering rotates on the committed CORRECTNESS_r*.json
-artifacts themselves: queries that have NEVER been hash-green sort first,
-then green ones least-recently-verified first — so the set the driver
-checks each round is exactly the set with the stalest evidence, and every
-query is re-verified at least every other round with zero manual upkeep.
-
-Queries rotated past position 50 in a given round are still verified
-locally: ``tools/compare.py --json CORRECTNESS_LOCAL_r{N}.json`` runs the
-FULL set against DuckDB each round and the artifact is committed (see
-CORRECTNESS_LOCAL_r03.json onward).
+``QUERIES`` keeps declared order (the core library, then the LLM-data
+kernels); ``ORACLE`` maps the same names to DuckDB SQL.
+``tests/test_oracle.py`` hash-checks every entry against its oracle at
+sf0.01 on each test run.
 """
 
 from __future__ import annotations
-
-import json
-from pathlib import Path
 
 from insect_observation_data_pipeline_spark.queries.testdata import QUERIES as _CORE
 from insect_observation_data_pipeline_spark.queries.testdata import flagship
@@ -26,307 +14,7 @@ from insect_observation_data_pipeline_spark.queries.oracle import ORACLE as _COR
 from insect_observation_data_pipeline_spark.queries.llm_testdata import LLM_QUERIES
 from insect_observation_data_pipeline_spark.queries.llm_oracle import LLM_ORACLE
 
-_REPO_ROOT = Path(__file__).resolve().parents[2]
-
-
-def _fold_green(
-    last: dict[str, int], rnd: int, rows: object
-) -> bool:
-    """Fold one driver CORRECTNESS artifact's hash-green rows into the
-    name -> latest-green-round map (shared by import and the
-    GREEN_SUMMARY.json regenerator in tools/green_summary.py). Returns
-    False without folding when the parsed JSON is not the expected
-    dict-of-rows shape (a half-written or foreign artifact must be
-    skippable, never an AttributeError — round-11 review)."""
-    if not isinstance(rows, dict):
-        return False
-    for name, row in rows.items():
-        if isinstance(row, dict) and row.get("hash_match"):
-            last[name] = max(last.get(name, 0), rnd)
-    return True
-
-
-def _last_green_round(root: Path = _REPO_ROOT) -> dict[str, int]:
-    """query name -> latest round whose committed driver CORRECTNESS file
-    shows it hash-green. Missing/NEW queries simply aren't in the map.
-
-    Round-11 (verdict #5): the fold no longer re-parses every
-    CORRECTNESS_r*.json at import forever. GREEN_SUMMARY.json (written
-    by ``python tools/green_summary.py``, committed per round) carries
-    the fold through its ``folded_through`` round; import parses only
-    artifacts NEWER than that — normally zero or one file. A corrupt
-    newer artifact is skipped WITHOUT discarding the summary's
-    evidence, so a bad file can age the map by at most one round
-    instead of re-rotating the whole set; a missing/corrupt summary
-    degrades to the original full fold (correct, just slower)."""
-    last: dict[str, int] = {}
-    base = 0
-    try:
-        d = json.loads((root / "GREEN_SUMMARY.json").read_text())
-        base = int(d["folded_through"])
-        last = {str(k): int(v) for k, v in d["last_green"].items()}
-    except (OSError, ValueError, TypeError, KeyError, json.JSONDecodeError):
-        base, last = 0, {}
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            rnd = int(f.stem.rsplit("r", 1)[-1])
-        except ValueError:
-            continue
-        if rnd <= base:
-            continue
-        try:
-            rows = json.loads(f.read_text())
-        except (OSError, ValueError):
-            # ValueError covers JSONDecodeError AND UnicodeDecodeError
-            # (non-UTF8 bytes) — a corrupt artifact must never crash
-            # package import (round-11 review; the round-10 code's
-            # except ValueError caught this, the first round-11 cut
-            # narrowed it and regressed)
-            continue
-        _fold_green(last, rnd, rows)
-    return last
-
-
-_ALL = {**_CORE, **LLM_QUERIES}
-_LAST_GREEN = _last_green_round()
-
-# KEEPER POLICY (round 6): the 50-slot driver cap guarantees
-# every-other-round verification only for the first 100 rotating
-# queries. Queries listed here are EXEMPT from driver rotation (they
-# always sort last) so the rotating set stays <= 100; each exemption
-# names the driver-rotated query whose evidence subsumes it. Exempt
-# queries are still verified against DuckDB EVERY round by the local
-# full run (CORRECTNESS_LOCAL_r{N}.json) and by pytest.
-ROTATION_EXEMPT: dict[str, str] = {
-    "x5_fingerprint": (
-        "fp128 is x1_dedup_exact's group key and x31_corpus_summary's "
-        "distinct-count input — both rotate; fp64 is pytest-covered"
-    ),
-    "x26_ann_ivf_probe4": (
-        "same ivf_topk code path as rotating x10_ann_ivf, widened to "
-        "nprobe=4; recall monotonicity pinned by tests/test_llm.py"
-    ),
-    "m1_binary_meta": (
-        "JVM-expression twin of rotating m2_media_features (identical "
-        "octet_length/sha256 semantics, minus the Arrow boundary m2 checks)"
-    ),
-    # Round 7: the documented exact-oracle baselines whose guarded scale
-    # twins rotate. Each pair is ONE kernel function parameterized by the
-    # guard, so the rotating twin executes a strict superset of the
-    # baseline's expressions (the guard only adds a join-side filter /
-    # candidate cut); the baseline form stays oracle-checked locally
-    # every round and pytest-pinned against its twin.
-    "x6_ngram_jaccard": (
-        "exact baseline of rotating x27_jaccard_maxdf — same "
-        "jaccard_pairs kernel (llm/dedup.py), max_df guard off"
-    ),
-    "x34_tf_cosine_pairs": (
-        "exact all-pairs baseline of rotating x34b_tf_cosine_candidates — "
-        "same tf_cosine_pairs kernel, candidate_max_df guard off"
-    ),
-    "h3_containment_keep": (
-        "unguarded twin of rotating h3b_containment_keep_maxdf — same "
-        "containment_keep kernel, max_df guard off"
-    ),
-    "x13_ann_lsh_multiprobe": (
-        "same lsh_topk code path as rotating x12_ann_lsh, widened to "
-        "probe_bits=3 (the x26_ann_ivf_probe4 precedent); recall "
-        "monotonicity pinned by tests/test_llm.py"
-    ),
-    # Round 8: the ANN family's exact baseline joins the keeper set
-    # (same pattern as x6/x34/h3): the guarded scale forms rotate.
-    "x9_ann_bruteforce": (
-        "exact all-cells baseline of rotating x10_ann_ivf — same "
-        "cosine/top-k kernel (llm/similarity.py dot/brute_force_topk), "
-        "cell-probe pruning off; IVF recall vs this baseline pinned by "
-        "tests/test_llm.py; stays in the bench headline set"
-    ),
-    # Round 8 (cont.): rotating x46_hybrid_rrf executes the bm25_topk
-    # kernel verbatim (query-by-document probes, depth 50) plus the
-    # cosine kernel and the RRF combiner — a strict superset of x45's
-    # expressions, so x45's fixed-probe form keeps local oracle + bench
-    # coverage while x46 carries the driver evidence.
-    # Round 16: x45_bm25_topk swapped INTO rotation for one round (the
-    # x43/w2b/x50 precedent — it has never had its own driver row; the
-    # r15 verdict queued it). Re-exempt once its driver row lands,
-    # restoring the rationale: "bm25_topk kernel driver-verified via
-    # rotating x46_hybrid_rrf (same code path, query-by-document probes
-    # at depth 50); the fixed-probe form stays oracle-checked locally
-    # every round, pytest-pinned, and in the bench extended set".
-    # Round 8 (cont.): rotating x47_bpe_tokenize runs bpe_merges
-    # verbatim and then encodes with its output, so the train-only form
-    # keeps local oracle + scaling coverage while x47 carries the
-    # driver evidence for the whole train+apply path. Round 9: x47's
-    # registered form trains 6 rounds (12 rounds of fixed job-cascade
-    # cost dominated its driver windows); x43 keeps the deeper
-    # 12-round form — the x12/x13 shallower-rotating precedent, where
-    # the exempt query is the widened variant of the driver-verified
-    # kernel.
-    # Round 15: x43_bpe_vocab swapped INTO rotation for one round (the
-    # w2b/x50 precedent — it had never had its own driver row; carrier
-    # x47 runs the same trainer at rounds=6 vs 12). Its driver row
-    # landed hash-green in CORRECTNESS_r15, so round 16 re-exempts it
-    # with the carrier rationale restored verbatim below.
-    "x43_bpe_vocab": (
-        "bpe_merges kernel driver-verified via rotating x47_bpe_tokenize "
-        "(train + encode, rounds=6 of the same trainer; x43's own "
-        "driver row hash-green in r15); the 12-round merge-table "
-        "oracle stays pinned locally every round and the trainer is "
-        "pytest-pinned against a sequential reference"
-    ),
-    # Round 8 (cont.): the sessionization pair folds into the rotating
-    # e25_session_census, which CALLS both component functions verbatim
-    # (the e8_window_census precedent) — one driver row re-verifies the
-    # lag/cumsum rewrite and the native session_window operator; both
-    # stay individually oracle-checked locally every round and their
-    # exact-gap boundary agreement is pytest-pinned.
-    "e2_sessionization": (
-        "per_user half of rotating e25_session_census (function called "
-        "verbatim); boundary agreement with e5 pinned by "
-        "tests/test_llm.py::test_session_boundary_exact_gap_agreement"
-    ),
-    "e5_session_window_stats": (
-        "per_session half of rotating e25_session_census (function "
-        "called verbatim); native session_window vs lag-rewrite "
-        "agreement pytest-pinned"
-    ),
-    # Round 9: the last exact all-pairs baseline still rotating joins
-    # its siblings (x6/x34/h3/x9/x21) in the keeper set — it was the
-    # worst-scaling rotating query (SCALING_r08: 9.79x per 10x data)
-    # burning a slot the exempt mechanism exists for.
-    "x32_containment": (
-        "exact unguarded baseline of the containment kernel — rotating "
-        "h3b_containment_keep_maxdf calls containment_pairs verbatim "
-        "(llm/dedup.py containment_keep -> containment_pairs), guard "
-        "on; the unguarded form stays oracle-checked locally every "
-        "round and pytest-pinned against h3's policy layer"
-    ),
-    # Round 9 (cont.): rotating h2_cluster_keep executes the full
-    # MinHash-pair + connected-components pipeline verbatim
-    # (minhash_lsh_dedup at the same threshold, then
-    # connected_components, then the representative policy) — a strict
-    # superset of both x7's and h1's expressions, so one driver row
-    # re-verifies the whole chain (the x45->x46 / x43->x47 precedent).
-    # Both stay in the bench sets and oracle-checked locally.
-    "x7_minhash_lsh": (
-        "minhash_lsh_dedup kernel driver-verified via rotating "
-        "h2_cluster_keep (same call, same threshold); banded-LSH "
-        "recall/threshold behavior pytest-pinned; stays in the bench "
-        "headline set"
-    ),
-    "h1_dup_clusters": (
-        "pairs -> connected_components chain driver-verified via "
-        "rotating h2_cluster_keep (both functions called verbatim "
-        "before the keep policy); propagation convergence "
-        "pytest-pinned; stays in the bench extended set"
-    ),
-    # Round 10: x50 swapped INTO rotation (the round-9 verdict flagged
-    # that its confusion-matrix aggregation was born exempt with only
-    # self-reported evidence). Round 11: the driver row landed
-    # (CORRECTNESS_r10, hash-green), so it re-exempts on the x3-kernel
-    # rationale the round-10 note planned, restoring rotation headroom
-    # to 2: the matrix is a corpus-grain rollup of the SAME lang_id
-    # expression rotating x3_text_quality driver-verifies per document.
-    "x50_langid_confusion": (
-        "corpus-grain rollup of the lang_id expression driver-verified "
-        "via rotating x3_text_quality (pred_lang/is_correct carried "
-        "verbatim; own driver row hash-green in r10); matrix agreement "
-        "with x3's groupBy pinned by tests/test_llm.py; stays in the "
-        "bench extended set and the local oracle run every round"
-    ),
-    #
-    # Round 10 (cont.): the event-analytics pair folds into the
-    # rotating e26_event_census, which CALLS both component functions
-    # verbatim (the e25_session_census precedent) — one driver row
-    # re-verifies the single-shuffle running-min funnel and the cohort
-    # matrix; both stay individually oracle-checked locally every
-    # round, in the bench extended set, and plan-audited.
-    "e6_funnel_steps": (
-        "funnel half of rotating e26_event_census (function called "
-        "verbatim); single-shuffle plan shape pinned by "
-        "tests/test_plans.py"
-    ),
-    "e7_cohort_retention": (
-        "cohort half of rotating e26_event_census (function called "
-        "verbatim); stays in the bench extended set and the local "
-        "oracle run every round"
-    ),
-    # Round 10 (cont.): the per-doc signal pair folds into the rotating
-    # x53_doc_signal_census (same precedent) — buys the slot that keeps
-    # rotating headroom >= 2 once x50 re-exempts after its driver row.
-    "x22_repetition_signals": (
-        "repetition half of rotating x53_doc_signal_census (function "
-        "called verbatim); oracle-checked locally every round"
-    ),
-    "x25_token_prob_score": (
-        "fluency half of rotating x53_doc_signal_census (function "
-        "called verbatim); oracle-checked locally every round"
-    ),
-    # Round 11: w2's scale variant — the steepest §2-core scaling curve
-    # was the exact countDistinct rollup (data-linear by nature, not a
-    # plan defect); w2b is the same join/rank shape over the x40 HLL
-    # register kernel (shuffle capped at 256 rows/group instead of one
-    # row per distinct combination). Both halves are driver-verified
-    # via their rotating carriers, the inverse of the x13/x26 pattern.
-    # Round 14: w2b swapped INTO rotation for one round (the x50
-    # precedent — round-13 verdict task #1). Its driver row landed
-    # hash-green in CORRECTNESS_r14, so round 15 re-exempts it with the
-    # carrier rationale restored verbatim below.
-    "w2b_best_month_sketch": (
-        "HLL-register scale variant of rotating w2_best_month_per_customer "
-        "(same join/rank shape) over the kernel rotating x40_hll_distinct "
-        "driver-verifies (approx.hll_registers/hll_state/hll_estimate, "
-        "called verbatim); 20%-accuracy vs w2's exact counts "
-        "pytest-pinned; in the bench extended set and the local oracle "
-        "run every round"
-    ),
-    # Round 7 (cont.): exact-decontamination baseline whose scale twin
-    # rotates AND re-computes the baseline's answer as one of its
-    # columns.
-    "x21_decontaminate": (
-        "exact baseline of rotating x41_bloom_decontaminate, which "
-        "carries the identical exact-join overlap as its n_true column "
-        "(one-sidedness n_bloom >= n_true pytest-pinned) — x41's "
-        "driver row re-verifies the x21 join every time it rotates"
-    ),
-}
-
-# Ordering priority (round 7 — fixes the starvation that let e1 miss
-# two consecutive driver windows when new never-green queries sorted
-# first and displaced the stalest greens):
-#   0. OVERDUE greens — not verified in the latest artifact round,
-#      stalest first. These are the queries whose every-other-round
-#      guarantee breaks if they miss this window; nothing may
-#      displace them.
-#   1. NEVER-green queries (new entrants) — they enter through
-#      whatever window slack the overdue set leaves (with the
-#      rotating set capped at 100 and ~50 due per round there is
-#      always >= 0 slack; entrants queue at most briefly, while a
-#      green query's evidence can never silently go 3 rounds stale).
-#   2. Fresh greens (verified in the latest round) — due next round.
-#   3. ROTATION_EXEMPT — always past the window.
-# Declared order breaks ties so the layout is deterministic.
-_DECL = {k: i for i, k in enumerate(_ALL)}
-_R_LATEST = max(_LAST_GREEN.values(), default=0)
-
-
-def _rotation_key(k: str) -> tuple[int, int, int]:
-    lg = _LAST_GREEN.get(k, 0)
-    if k in ROTATION_EXEMPT:
-        grp = 3
-    elif lg == 0:
-        grp = 1
-    elif lg < _R_LATEST:
-        grp = 0
-    else:
-        grp = 2
-    return (grp, lg, _DECL[k])
-
-
-QUERIES = {k: _ALL[k] for k in sorted(_ALL, key=_rotation_key)}
+QUERIES = {**_CORE, **LLM_QUERIES}
 ORACLE = {**_CORE_ORACLE, **LLM_ORACLE}
 
-# kept for tests/backward-compat: everything ever driver-green
-DRIVER_GREEN: frozenset = frozenset(_LAST_GREEN)
-
-__all__ = ["QUERIES", "ORACLE", "DRIVER_GREEN", "ROTATION_EXEMPT", "flagship"]
+__all__ = ["QUERIES", "ORACLE", "flagship"]

@@ -929,12 +929,12 @@ def e25_session_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (e2_sessionization) and the per-SESSION native ``session_window``
     intervals (e5_session_window_stats), unioned under a ``grain``
     discriminator with NULL-padded off-grain columns. Both component
-    functions execute VERBATIM (called directly below) so one driver
+    functions execute VERBATIM (called directly below) so one oracle
     row re-verifies the manual gaps-and-islands rewrite AND the
-    engine's own stateful session operator; each remains individually
-    registered as ROTATION_EXEMPT with every-round local oracle + the
-    exact-gap boundary-agreement pytest pin. Cost is the two component
-    plans plus an append-only union — no extra shuffle."""
+    engine's own stateful session operator; each also stays registered
+    with its own oracle row in tests/test_oracle.py and the exact-gap
+    boundary-agreement pytest pin. Cost is the two component plans
+    plus an append-only union — no extra shuffle."""
     per_user = e2_sessionization(spark, sf_dir).select(
         F.lit("per_user").alias("grain"),
         "user_id",
@@ -1083,12 +1083,11 @@ def e26_event_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (e6_funnel_steps) and the cohort-retention matrix
     (e7_cohort_retention) unioned under a ``grain`` discriminator with
     typed NULL padding for off-grain columns. Both component functions
-    execute VERBATIM (called directly below) so one driver row
+    execute VERBATIM (called directly below) so one oracle row
     re-verifies the single-shuffle running-min funnel AND the
-    two-agg-plus-join retention matrix; each remains individually
-    registered as ROTATION_EXEMPT with every-round local oracle
-    coverage. Cost is the two component plans plus an append-only
-    union — no extra shuffle."""
+    two-agg-plus-join retention matrix; each also stays registered
+    with its own oracle row in tests/test_oracle.py. Cost is the two
+    component plans plus an append-only union — no extra shuffle."""
     from insect_observation_data_pipeline_spark.queries.testdata import (
         e7_cohort_retention,
     )
@@ -1124,10 +1123,10 @@ def x53_doc_signal_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (x22_repetition_signals) and the corpus-unigram fluency score
     (x25_token_prob_score) unioned under a ``signal`` discriminator
     with typed NULL padding. Both component functions execute VERBATIM
-    (called directly below) so one driver row re-verifies both
-    per-doc scan+agg kernels; each remains individually registered as
-    ROTATION_EXEMPT with every-round local oracle coverage. Cost is
-    the two component plans plus an append-only union."""
+    (called directly below) so one oracle row re-verifies both
+    per-doc scan+agg kernels; each also stays registered with its own
+    oracle row in tests/test_oracle.py. Cost is the two component
+    plans plus an append-only union."""
     rep = x22_repetition_signals(spark, sf_dir).select(
         F.lit("repetition").alias("signal"),
         "doc_id",

@@ -20,6 +20,37 @@ import os
 from pyspark.sql import SparkSession
 
 
+def session_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The config pins ``get_spark`` applies before any ``extra_conf``.
+
+    Read at call time from ``$SPARK_GRAFT_CPUS``; the ``spark.sql.*``
+    keys here are also the ones a vanilla session leaves at Spark's
+    defaults (``tools/compare.vanilla_session``).
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": str(
+            shuffle_partitions if shuffle_partitions is not None else int(cpus)
+        ),
+        "spark.sql.session.timeZone": "UTC",
+        # Parquet files written without the UTC-adjusted flag are inferred
+        # as TIMESTAMP_NTZ by Spark 4.x; that type is rejected by
+        # unix_micros and by withWatermark (streaming event time). With
+        # the session tz pinned to UTC the instant semantics are
+        # identical, so keep the classic TIMESTAMP inference for a stable
+        # dtype contract across driver environments.
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Parquet scans: vectorized reader + pushdown are on by default;
+        # keep splits big enough that sf0.1 files don't over-partition.
+        "spark.sql.files.maxPartitionBytes": "134217728",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    }
+
+
 def get_spark(
     app_name: str = "insect-observation-data-pipeline-spark",
     master: str | None = None,
@@ -48,27 +79,7 @@ def get_spark(
     elif not SparkSession.getActiveSession():
         builder = builder.master(f"local[{cpus}]")
 
-    conf = {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.shuffle.partitions": str(
-            shuffle_partitions if shuffle_partitions is not None else int(cpus)
-        ),
-        "spark.sql.session.timeZone": "UTC",
-        # Parquet files written without the UTC-adjusted flag are inferred
-        # as TIMESTAMP_NTZ by Spark 4.x; that type is rejected by
-        # unix_micros and by withWatermark (streaming event time). With
-        # the session tz pinned to UTC the instant semantics are
-        # identical, so keep the classic TIMESTAMP inference for a stable
-        # dtype contract across driver environments.
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # Parquet scans: vectorized reader + pushdown are on by default;
-        # keep splits big enough that sf0.1 files don't over-partition.
-        "spark.sql.files.maxPartitionBytes": "134217728",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-    }
+    conf = session_conf(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -47,7 +47,8 @@ keep both types.
 
 from __future__ import annotations
 
-import hashlib
+# the same order-insensitive value hash as the per-query oracle check
+from tools.compare import table_hash  # noqa: F401
 
 SQL = r"""
 CREATE MACRO nna(x) AS
@@ -577,27 +578,3 @@ def build(con, fixtures_dir: str) -> None:
     types = ", ".join(f"'{t[0]}'" for t in SUBSCRIPTION_TYPES)
     con.execute(SQL.replace("{d}", fixtures_dir).replace("{types}", types))
 
-
-def norm_cell(v) -> str:
-    if v is None:
-        return "<NULL>"
-    if isinstance(v, float):
-        if v != v:
-            return "NaN"
-        if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return repr(v)
-    return str(v)
-
-
-def table_lines(rows: list[tuple], colnames: list[str]) -> list[str]:
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    return sorted("\x1f".join(norm_cell(r[i]) for i in order) for r in rows)
-
-
-def table_hash(rows: list[tuple], colnames: list[str]) -> str:
-    h = hashlib.sha256()
-    for line in table_lines(rows, colnames):
-        h.update(line.encode())
-        h.update(b"\n")
-    return h.hexdigest()[:16]

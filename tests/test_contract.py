@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 import __spark_entry__ as entrymod
 
 
@@ -24,360 +22,6 @@ def test_keys_match():
         f"queries without oracle beyond the sanctioned rows-only set: "
         f"{missing ^ ROWS_ONLY}"
     )
-
-
-def test_rotation_guarantee():
-    """The driver verifies the first 50 queries() entries per round; the
-    rotation guarantees every-other-round re-verification only while the
-    ROTATING set (non-exempt) stays <= 100. Exempt queries must exist in
-    the registry, carry a documented reason, and sort at the very end so
-    they never displace a rotating query from the driver window."""
-    from insect_observation_data_pipeline_spark.queries import QUERIES, ROTATION_EXEMPT
-
-    assert set(ROTATION_EXEMPT) <= set(QUERIES)
-    rotating = [q for q in QUERIES if q not in ROTATION_EXEMPT]
-    assert len(rotating) <= 100, (
-        f"{len(rotating)} rotating queries exceed the 2x50 driver cap — "
-        "consolidate or add a documented ROTATION_EXEMPT entry"
-    )
-    assert all(reason.strip() for reason in ROTATION_EXEMPT.values())
-    tail = list(QUERIES)[-len(ROTATION_EXEMPT):]
-    assert set(tail) == set(ROTATION_EXEMPT)
-
-
-def test_rotation_no_starvation():
-    """Machine-check of the every-other-round guarantee against the
-    COMMITTED driver artifacts (round-6 verdict: e1 missed two
-    consecutive windows because new never-green queries displaced the
-    stalest greens). Invariants on the current ordering:
-
-    - the overdue set (green, but not in the latest artifact round)
-      must FIT the 50-slot window — if it ever exceeds 50 the
-      guarantee is infeasible and this fails loudly;
-    - every overdue query IS in the window (nothing — in particular
-      no never-green entrant — displaces one);
-    - already-breached queries (>= 2 rounds stale, like e1 at r7)
-      sort at the very front, so even a partially-run driver window
-      repairs the oldest evidence first;
-    - never-green entrants enter only through leftover slack.
-    """
-    from insect_observation_data_pipeline_spark.queries import (
-        QUERIES,
-        ROTATION_EXEMPT,
-        _LAST_GREEN,
-        _R_LATEST,
-    )
-
-    rotating = [q for q in QUERIES if q not in ROTATION_EXEMPT]
-    window = list(QUERIES)[:50]
-    overdue = [
-        q for q in rotating if 0 < _LAST_GREEN.get(q, 0) < _R_LATEST
-    ]
-    assert len(overdue) <= 50, (
-        f"{len(overdue)} overdue queries cannot fit the 50-slot driver "
-        "window — the every-other-round guarantee is infeasible; "
-        "consolidate queries"
-    )
-    displaced = set(overdue) - set(window)
-    assert not displaced, (
-        f"overdue queries displaced from the driver window: {displaced}"
-    )
-    breached = sorted(
-        (q for q in rotating if 0 < _LAST_GREEN.get(q, 0) < _R_LATEST - 1),
-        key=lambda q: _LAST_GREEN[q],
-    )
-    assert window[: len(breached)] == breached
-    never = [q for q in rotating if _LAST_GREEN.get(q, 0) == 0]
-    slack = 50 - len(overdue)
-    in_window = [q for q in never if q in set(window)]
-    assert len(in_window) == min(slack, len(never)), (
-        "never-green entrants must fill exactly the window slack left "
-        f"by the overdue set (slack={slack}, entrants={len(never)}, "
-        f"in window={len(in_window)})"
-    )
-
-
-def test_green_summary_fresh_and_fold_equal():
-    """GREEN_SUMMARY.json (round-11, verdict #5) must be committed,
-    folded through the newest committed driver artifact (so import
-    parses at most the artifacts of rounds newer than the summary —
-    normally zero), and the summary-backed map must equal the brute
-    full fold over every artifact."""
-    import json
-    import re
-    import subprocess
-    from pathlib import Path
-
-    from insect_observation_data_pipeline_spark.queries import (
-        _fold_green,
-        _last_green_round,
-    )
-
-    root = Path(__file__).resolve().parents[1]
-    tracked = subprocess.run(
-        ["git", "ls-files", "GREEN_SUMMARY.json", "CORRECTNESS_r*.json"],
-        cwd=root, capture_output=True, text=True, check=True,
-    ).stdout.split()
-    assert "GREEN_SUMMARY.json" in tracked, (
-        "GREEN_SUMMARY.json not committed — run tools/green_summary.py"
-    )
-    newest = max(
-        int(re.search(r"_r(\d+)\.json$", p).group(1))
-        for p in tracked if p.startswith("CORRECTNESS_r")
-    )
-    summary = json.loads((root / "GREEN_SUMMARY.json").read_text())
-    # the current round's driver artifact lands AFTER the builder's
-    # last action, so the summary may lawfully trail by exactly one
-    # round (import then parses that one file); trailing further means
-    # a round forgot to rerun tools/green_summary.py
-    assert summary["folded_through"] >= newest - 1, (
-        f"GREEN_SUMMARY folded through r{summary['folded_through']} but "
-        f"CORRECTNESS_r{newest:02d}.json exists — rerun tools/green_summary.py"
-    )
-    full: dict[str, int] = {}
-    corrupt: list[str] = []
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        # same try/skip the import path uses (round-12 ADVICE): a
-        # corrupt committed artifact must fail THIS assertion with an
-        # actionable message, not ERROR in json.loads — and must not
-        # be conflated with a stale summary by the equality below
-        # (the import path keeps its greens via the summary; a raw
-        # fold that skipped it silently would legitimately differ)
-        try:
-            rows = json.loads(f.read_text())
-        except (OSError, ValueError, UnicodeDecodeError):
-            corrupt.append(f.name)
-            continue
-        if not _fold_green(full, int(f.stem.rsplit("r", 1)[-1]), rows):
-            corrupt.append(f.name)
-    assert not corrupt, (
-        f"committed CORRECTNESS artifacts {corrupt} are corrupt or "
-        "wrong-shaped: restore them from git or remove them, then "
-        "rerun tools/green_summary.py"
-    )
-    assert _last_green_round() == full
-
-
-def test_last_green_round_corrupt_artifact(tmp_path):
-    """A corrupt CORRECTNESS artifact newer than the summary must be
-    skipped WITHOUT discarding the summary's evidence (the old full
-    fold silently treated corrupt files as 'no evidence', which could
-    re-rotate the whole set); a valid newer artifact still folds in;
-    a corrupt/missing summary degrades to the full fold."""
-    import json
-
-    from insect_observation_data_pipeline_spark.queries import _last_green_round
-
-    (tmp_path / "GREEN_SUMMARY.json").write_text(json.dumps(
-        {"folded_through": 9, "last_green": {"qa": 9, "qb": 8}}
-    ))
-    # corrupt newer artifact: must not wipe qa/qb
-    (tmp_path / "CORRECTNESS_r10.json").write_text("{not json")
-    # valid even-newer artifact: must fold on top of the summary
-    (tmp_path / "CORRECTNESS_r11.json").write_text(json.dumps(
-        {"qa": {"hash_match": True}, "qc": {"hash_match": True},
-         "qd": {"hash_match": False}}
-    ))
-    # artifact at or below folded_through must NOT be re-read (a stale
-    # green there would already be in the summary; prove it's skipped
-    # by making it unparseable garbage too)
-    (tmp_path / "CORRECTNESS_r09.json").write_text("garbage")
-    got = _last_green_round(root=tmp_path)
-    assert got == {"qa": 11, "qb": 8, "qc": 11}
-    # non-UTF8 bytes and valid-JSON-but-wrong-shape artifacts must be
-    # skipped too, not crash the fold (round-11 review: the first cut
-    # caught JSONDecodeError but not UnicodeDecodeError/AttributeError)
-    (tmp_path / "CORRECTNESS_r12.json").write_bytes(b"\xff\xfe\x00corrupt")
-    (tmp_path / "CORRECTNESS_r13.json").write_text('[{"qa": 1}]')
-    got = _last_green_round(root=tmp_path)
-    assert got == {"qa": 11, "qb": 8, "qc": 11}
-    # corrupt summary: degrade to the full fold of parseable artifacts
-    (tmp_path / "GREEN_SUMMARY.json").write_text("{broken")
-    got = _last_green_round(root=tmp_path)
-    assert got == {"qa": 11, "qc": 11}
-
-
-def test_prev_bench_reads_latest_artifact():
-    """Regression for the round-6 verdict's top defect: committed
-    BENCH_r4+ artifacts carry ``parsed: null`` with the JSON body
-    surviving only front-truncated in ``tail``; _prev_bench must
-    recover the LATEST round's numbers from it (not silently walk back
-    to round 3) and report which artifact it used."""
-    import os
-    import re
-    import subprocess
-
-    import bench
-
-    prev = bench._prev_bench()
-    # anchor on GIT-TRACKED artifacts, sorted on the PARSED round
-    # number: lexicographic filename order breaks at r100. Since
-    # round 12 _prev_bench itself reads only tracked artifacts (an
-    # untracked stray BENCH_rNN.json must not become the deltas
-    # baseline), so the assertion is EQUALITY with the newest tracked
-    # round, not merely "did not walk past it".
-    here = os.path.dirname(bench.__file__)
-    rnum = lambda name: int(re.search(r"BENCH_r(\d+)\.json$", name).group(1))  # noqa: E731
-    tracked = [
-        n
-        for n in subprocess.run(
-            ["git", "ls-files", "BENCH_r*.json"],
-            cwd=here, capture_output=True, text=True, check=True,
-        ).stdout.split()
-        # the glob also matches non-round artifacts (e.g. the driver's
-        # 8-core scaling run BENCH_r15_c8.json); keep only names
-        # _prev_bench itself considers, mirroring its numeric filter
-        if re.search(r"BENCH_r(\d+)\.json$", n)
-    ]
-    latest = max(tracked, key=rnum)
-    assert prev.get("_src") and rnum(prev["_src"]) == rnum(latest), (
-        "_prev_bench did not pick the newest committed artifact "
-        f"(got {prev.get('_src')}, latest tracked {latest})"
-    )
-    assert prev.get("queries") and prev.get("calib_sec"), prev.get("_src")
-    if latest == "BENCH_r06.json":
-        # spot-values hand-read from BENCH_r06.json's tail (the exact
-        # artifact the round-6 defect was diagnosed on); later rounds
-        # keep only the structural assertions above
-        assert prev["queries"]["x1_dedup_exact"] == 0.349
-        assert prev["queries"]["w2_best_month_per_customer"] == 2.546
-        assert prev["calib_ops"] == {
-            "codegen": 0.109, "shuffle": 0.44, "sort": 1.515,
-        }
-        assert (
-            prev["extended_queries"]["x34b_tf_cosine_candidates"] == 4.906
-        )
-        # truncated-away keys are absent, never fabricated
-        assert "q1_pricing_summary" not in prev["queries"]
-
-
-def test_bench_line_survives_truncation():
-    """The emitted key order must keep queries/calib AND the epoch-index
-    scalars (round-10 verdict #1: BENCH_r10 truncated away the numbers
-    README's regression rule judges on) inside the driver's 2000-char
-    tail window, and _parse_bench_line must fully recover a line
-    truncated to that window. The fake mirrors main()'s emit order."""
-    import json
-
-    import bench
-
-    fake = {
-        "metric": "m", "value": 1.0, "unit": "sec",
-        "total_delta_vs_prev": 1.0, "total_delta_calib_normalized": 1.0,
-        "prev_src": "BENCH_r06.json",
-        "index_raw_vs_epoch": {q: 1.0 for q in bench.BENCH_QUERIES},
-        "index_norm_vs_epoch": {q: 1.0 for q in bench.BENCH_QUERIES},
-        "deltas_vs_prev": {q: 1.234 for q in bench.BENCH_QUERIES},
-        "deltas_calib_normalized": {q: 1.0 for q in bench.BENCH_QUERIES},
-        "calib_drift_vs_prev": 1.0, "errors": {}, "sf": 0.1, "n": 5,
-        "extended_queries": {q: 0.5 for q in bench.EXTENDED_QUERIES},
-        "extended_total": 9.0,
-        "queries": {q: 0.5 for q in bench.BENCH_QUERIES},
-        "calib_sec": 2.0,
-        "calib_ops": {"codegen": 0.1, "shuffle": 0.4, "sort": 1.5},
-        "calib_drift_vs_epoch": 1.02,
-        "calib_drift_ops_vs_epoch": {
-            "codegen": 1.1, "shuffle": 1.0, "sort": 0.97,
-        },
-        "index_raw_vs_epoch_total": 1.04,
-        "index_norm_vs_epoch_total": 1.02,
-    }
-    got = bench._parse_bench_line(json.dumps(fake)[-2000:])
-    assert got["queries"] == fake["queries"]
-    assert got["calib_ops"] == fake["calib_ops"]
-    # the epoch scalars the judge reads must survive the tail window
-    assert got["calib_drift_vs_epoch"] == 1.02
-    assert got["index_raw_vs_epoch_total"] == 1.04
-    assert got["index_norm_vs_epoch_total"] == 1.02
-    assert got["calib_drift_ops_vs_epoch"] == fake["calib_drift_ops_vs_epoch"]
-
-
-def test_epoch_chain_composes():
-    """EPOCH_CHAIN (round-13, VERDICT r12 #3): chained_epoch() multiplies
-    the pinned round-7 anchors through every re-base link, so the first
-    real re-base is a data-only append. Exercise a synthetic two-link
-    chain: factors compose multiplicatively, query_factor defaults to
-    calib_factor, and an empty chain is the identity."""
-    import bench
-
-    base_calib, base_queries = bench.chained_epoch()
-    assert base_calib == bench.EPOCH_CALIB_OPS
-    assert base_queries == bench.EPOCH_QUERIES
-
-    chain = [
-        {"round": 13, "calib_factor": 2.0, "query_factor": 3.0},
-        {"round": 17, "calib_factor": 0.5},  # query_factor defaults
-    ]
-    orig = bench.EPOCH_CHAIN
-    bench.EPOCH_CHAIN = chain
-    try:
-        calib, queries = bench.chained_epoch()
-    finally:
-        bench.EPOCH_CHAIN = orig
-    for op, v in bench.EPOCH_CALIB_OPS.items():
-        assert calib[op] == pytest.approx(v * 2.0 * 0.5)
-    for n, v in bench.EPOCH_QUERIES.items():
-        assert queries[n] == pytest.approx(v * 3.0 * 0.5)
-    # the pinned anchors themselves were never mutated
-    assert bench.EPOCH_CALIB_OPS["sort"] == 1.313
-
-
-def test_bench_current_round_and_local_artifact_name():
-    """bench.py names its full-line artifact after the CURRENT round
-    (1 + newest committed driver artifact) so the committed
-    BENCH_LOCAL_r{N}.json lines up with the driver's BENCH_r{N}.json."""
-    import os
-    import re
-    import subprocess
-
-    import bench
-
-    here = os.path.dirname(bench.__file__)
-    tracked = subprocess.run(
-        ["git", "ls-files", "BENCH_r*.json", "CORRECTNESS_r*.json"],
-        cwd=here, capture_output=True, text=True, check=True,
-    ).stdout.split()
-    newest = max(
-        int(m.group(1))
-        for m in (re.search(r"_r(\d+)\.json$", p) for p in tracked)
-        # the globs also match non-round artifacts (e.g. the driver's
-        # 8-core scaling run BENCH_r15_c8.json) — skip them, exactly as
-        # bench._current_round's own numeric filter does
-        if m
-    )
-    # EQUALITY, not >= (round-12 ADVICE): a stale/foreign untracked
-    # BENCH_r99.json in the checkout must not skew the artifact name —
-    # _current_round derives from git ls-files exactly like this test
-    assert bench._current_round() == newest + 1
-
-
-def test_round_inference_trusts_empty_git_answer(monkeypatch):
-    """git succeeding with ZERO tracked artifacts is a trusted answer
-    (fresh evidence repo: round 1, no prev baseline) and must NOT fall
-    through to the filesystem glob — an untracked stray BENCH_r99.json
-    would otherwise name the artifact BENCH_LOCAL_r100.json and become
-    the deltas_vs_prev baseline, the exact skew the round-12 ADVICE fix
-    closed (round-12 review: the fallback previously engaged on ANY
-    empty result, and _prev_bench never consulted git at all). The glob
-    remains the fallback only when git itself is unavailable (None)."""
-    import bench
-
-    monkeypatch.setattr(
-        bench, "_tracked_evidence_names", lambda pats: []
-    )
-    # the real checkout HAS stray-matching files on disk (the committed
-    # artifacts themselves); trusting the empty git answer means they
-    # are invisible here
-    assert bench._current_round() == 1
-    assert bench._prev_bench() == {}
-
-    # non-git copy: git failed -> filesystem fallback engages and sees
-    # the real artifacts again
-    monkeypatch.setattr(
-        bench, "_tracked_evidence_names", lambda pats: None
-    )
-    assert bench._current_round() > 1
-    assert bench._prev_bench().get("queries")
 
 
 def test_entry_runs(spark):
@@ -435,324 +79,6 @@ def test_write_partitioned_prunes(spark, tmp_path):
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert pf and "o_status" in pf.group(1)
     assert df.count() == orders.filter("o_orderstatus = 'F'").count()
-
-
-def test_vanilla_parity_artifact_green():
-    """The driver-environment parity gate (round-8, j14 class fix):
-    CORRECTNESS_VANILLA_r{N}.json — the full oracle suite run under a
-    BARE session with none of get_spark()'s pins — must exist and be
-    all-green in its latest committed round. Regenerate per round with
-    `python tools/compare.py --vanilla --json CORRECTNESS_VANILLA_r{N}.json`.
-    Guards the failure mode where a config-coupled expression
-    (unix_micros/withWatermark on TIMESTAMP_NTZ, ANSI arithmetic) is
-    green under the pinned session and red on the driver."""
-    import json
-    import os
-    import re
-    import subprocess
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tracked = subprocess.run(
-        ["git", "ls-files", "CORRECTNESS_VANILLA_r*.json"],
-        cwd=here, capture_output=True, text=True, check=True,
-    ).stdout.split()
-    assert tracked, "no committed vanilla parity artifact"
-    latest = max(
-        tracked,
-        key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)),
-    )
-    rows = json.load(open(os.path.join(here, latest)))
-    queries = {n for n in rows if not n.startswith("__")}
-    assert len(queries) >= 100, f"{latest} covers only {len(queries)} queries"
-    # note loophole closed (round-10, verdict #3): a row passes only on
-    # hash_match or membership in the explicit ROWS_ONLY allowlist —
-    # a red query annotated with a free-text note no longer slips by
-    bad = {
-        name: rows[name].get("err")
-        for name in queries
-        if not (rows[name].get("hash_match") or name in ROWS_ONLY)
-    }
-    assert not bad, f"vanilla-session failures in {latest}: {bad}"
-
-
-def test_registry_covered_by_local_artifact():
-    """Round-9 guard for the round-8 defect class: a query registered in
-    a snapshot commit AFTER the round's artifacts were generated shipped
-    with zero committed oracle evidence (e25/e9/x48 at r8). Every name
-    in the registry must have a GREEN row in the latest committed
-    CORRECTNESS_LOCAL_r*.json AND CORRECTNESS_VANILLA_r*.json — so
-    registering a query forces regenerating both artifacts in the same
-    change, or this fails. Regenerate with
-    `python tools/compare.py [--vanilla] --json CORRECTNESS_{LOCAL,VANILLA}_r{N}.json`.
-    """
-    import json
-    import os
-    import re
-    import subprocess
-
-    from insect_observation_data_pipeline_spark.queries import QUERIES
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for kind in ("LOCAL", "VANILLA"):
-        tracked = subprocess.run(
-            ["git", "ls-files", f"CORRECTNESS_{kind}_r*.json"],
-            cwd=here, capture_output=True, text=True, check=True,
-        ).stdout.split()
-        assert tracked, f"no committed {kind} artifact"
-        latest = max(
-            tracked,
-            key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)),
-        )
-        rows = json.load(open(os.path.join(here, latest)))
-        unverified = set(QUERIES) - set(rows)
-        assert not unverified, (
-            f"registered queries with no row in {latest}: "
-            f"{sorted(unverified)} — regenerate the artifact"
-        )
-        # note loophole closed (round-10, verdict #3): only hash_match
-        # or the explicit ROWS_ONLY allowlist passes a row
-        bad = {
-            name: rows[name].get("err")
-            for name in QUERIES
-            if not (rows[name].get("hash_match") or name in ROWS_ONLY)
-        }
-        assert not bad, f"non-green registered queries in {latest}: {bad}"
-
-
-def test_artifact_freshness():
-    """Round-10 guard for the round-9 verdict's top defect: commit
-    0631782 changed six operator modules AFTER the 116/116 artifacts
-    were generated, leaving the committed evidence stale-by-
-    construction. Enforced mechanically: the last commit touching the
-    package source must be an ancestor of (or equal to) the commit that
-    last touched each of the latest LOCAL/VANILLA artifacts — so any
-    package-source commit made after the artifacts landed turns this
-    red until both are regenerated. Artifacts from round 10 onward also
-    carry a ``__meta__.generated_at_commit`` provenance stamp (written
-    by tools/compare.py --json).
-
-    ONE sanctioned escape: when the artifact's stamped
-    ``package_ast_fingerprint`` (docstring-stripped AST hash — comments
-    never reach the AST) equals the fingerprint of the CURRENT package
-    tree, every post-artifact package commit was provably cosmetic and
-    the evidence is behaviorally fresh; any code change still fails
-    until regeneration."""
-    import json
-    import os
-    import re
-    import subprocess
-    import sys
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    def _git(*args: str) -> str:
-        return subprocess.run(
-            ["git", *args], cwd=here, capture_output=True, text=True,
-        ).stdout.strip()
-
-    pkg_commit = _git(
-        "log", "-1", "--format=%H", "--",
-        "insect_observation_data_pipeline_spark/",
-    )
-    for kind in ("LOCAL", "VANILLA"):
-        tracked = subprocess.run(
-            ["git", "ls-files", f"CORRECTNESS_{kind}_r*.json"],
-            cwd=here, capture_output=True, text=True, check=True,
-        ).stdout.split()
-        assert tracked, f"no committed {kind} artifact"
-        latest = max(
-            tracked,
-            key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)),
-        )
-        rnd = int(re.search(r"_r(\d+)\.json$", latest).group(1))
-        meta = None
-        if rnd >= 10:
-            meta = json.load(open(os.path.join(here, latest))).get("__meta__")
-            assert meta and meta.get("generated_at_commit"), (
-                f"{latest} lacks the __meta__ provenance stamp — "
-                "regenerate with tools/compare.py --json"
-            )
-        art_commit = _git("log", "-1", "--format=%H", "--", latest)
-        assert art_commit, f"{latest} tracked but has no commit"
-        if meta and meta.get("package_ast_fingerprint"):
-            # the strongest form (round-10 review: artifacts generated
-            # from a dirty tree record a pre-commit HEAD, which confuses
-            # auditors): ALWAYS require the stamped behavior fingerprint
-            # to equal the current tree's — the committed evidence then
-            # provably corresponds to the committed code regardless of
-            # where in the commit dance the generation happened, and
-            # cosmetic (comment/docstring-only) drift still passes
-            sys.path.insert(0, here)
-            from tools.compare import package_ast_fingerprint
-
-            current = package_ast_fingerprint(here)
-            assert current == meta["package_ast_fingerprint"], (
-                f"{latest} was generated from package code whose "
-                "behavior fingerprint differs from the current tree "
-                f"({meta['package_ast_fingerprint'][:16]} != "
-                f"{current[:16]}) — regenerate CORRECTNESS_{kind}_r*.json"
-            )
-            continue
-        fresh = subprocess.run(
-            ["git", "merge-base", "--is-ancestor", pkg_commit, art_commit],
-            cwd=here,
-        ).returncode == 0
-        assert fresh, (
-            f"package source moved past {latest}: last package commit "
-            f"{pkg_commit[:12]} postdates the artifact's last commit "
-            f"{art_commit[:12]} — regenerate CORRECTNESS_{kind}_r*.json "
-            "from the current code and commit it with (or after) the "
-            "source change"
-        )
-
-
-def test_evidence_artifacts_self_attest():
-    """Round-12 closure of the fingerprint drift-hole one level up:
-    every per-round evidence artifact — not just CORRECTNESS — must
-    carry the shared ``__meta__`` stamp and its fingerprint must equal
-    the current tree's, so PLANS' "0 violations", SCALING's curves and
-    BENCH_LOCAL's timings are provably evidence FOR the committed
-    code. Enforced from round 12 (the r12 artifacts were regenerated
-    with the stamp in the same change); earlier artifacts predate it. SHUFFLE_EVIDENCE is
-    stamped but NOT gated: it is a one-time illustrative measurement
-    whose invariant is re-pinned fresh on every suite run by
-    test_w2b_register_shuffle_bounded_vs_exact_distinct."""
-    import json
-    import os
-    import re
-    import subprocess
-    import sys
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, here)
-    from tools.compare import package_ast_fingerprint
-
-    current = package_ast_fingerprint(here)
-    for kind in ("PLANS", "SCALING", "BENCH_LOCAL"):
-        tracked = subprocess.run(
-            ["git", "ls-files", f"{kind}_r*.json"],
-            cwd=here, capture_output=True, text=True, check=True,
-        ).stdout.split()
-        assert tracked, f"no committed {kind} artifact"
-        latest = max(
-            tracked,
-            key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)),
-        )
-        rnd = int(re.search(r"_r(\d+)\.json$", latest).group(1))
-        if rnd < 12:
-            continue
-        meta = json.load(open(os.path.join(here, latest))).get("__meta__")
-        assert meta and meta.get("package_ast_fingerprint"), (
-            f"{latest} lacks the __meta__ provenance stamp — regenerate "
-            "with its tool (tools/audit_plans.py / tools/scaling.py / "
-            "bench.py)"
-        )
-        assert meta["package_ast_fingerprint"] == current, (
-            f"{latest} was generated from a tree whose behavior "
-            f"fingerprint differs from the current one "
-            f"({meta['package_ast_fingerprint'][:16]} != {current[:16]}) "
-            f"— regenerate {kind}_r*.json"
-        )
-
-
-def test_exempt_twins_still_rotate():
-    """Keeps the exempt set honest mechanically (round-8 verdict #6):
-    every ROTATION_EXEMPT rationale must name at least one REGISTERED,
-    ROTATING query (its driver-evidence carrier) — if the named twin is
-    deregistered or itself exempted, this fails. For the
-    kernel-superset exemptions, additionally assert the claimed
-    call-path in source: the rotating twin's code (or its policy
-    layer) must actually reference the exempt query's kernel."""
-    import inspect
-    import re
-
-    from insect_observation_data_pipeline_spark.queries import (
-        QUERIES,
-        ROTATION_EXEMPT,
-    )
-
-    rotating = {q for q in QUERIES if q not in ROTATION_EXEMPT}
-    for name, reason in ROTATION_EXEMPT.items():
-        mentioned = set(re.findall(r"[a-z0-9]+(?:_[a-z0-9]+)+", reason))
-        carriers = mentioned & rotating
-        assert carriers, (
-            f"{name}'s exemption rationale names no rotating query "
-            f"(mentioned: {sorted(mentioned & set(QUERIES))})"
-        )
-
-    # claimed kernel call-paths, checked against the twin's source
-    twin_kernel = {
-        "x45_bm25_topk": ("x46_hybrid_rrf", "bm25_topk"),
-        "x43_bpe_vocab": ("x47_bpe_tokenize", "bpe_merges"),
-        "x7_minhash_lsh": ("h2_cluster_keep", "minhash_lsh_dedup"),
-        "h1_dup_clusters": ("h2_cluster_keep", "connected_components"),
-        "e2_sessionization": ("e25_session_census", "e2_sessionization"),
-        "e5_session_window_stats": (
-            "e25_session_census", "e5_session_window_stats",
-        ),
-        "h3_containment_keep": (
-            "h3b_containment_keep_maxdf", "containment_keep",
-        ),
-        "x21_decontaminate": (
-            "x41_bloom_decontaminate", "decontaminate",
-        ),
-        "e6_funnel_steps": ("e26_event_census", "e6_funnel_steps"),
-        "e7_cohort_retention": ("e26_event_census", "e7_cohort_retention"),
-        "x22_repetition_signals": (
-            "x53_doc_signal_census", "x22_repetition_signals",
-        ),
-        "x25_token_prob_score": (
-            "x53_doc_signal_census", "x25_token_prob_score",
-        ),
-        "x50_langid_confusion": ("x3_text_quality", "lang_id"),
-        "w2b_best_month_sketch": ("x40_hll_distinct", "hll_estimate"),
-    }
-    for exempt, (twin, kernel) in twin_kernel.items():
-        assert twin in rotating, f"{exempt}'s twin {twin} no longer rotates"
-        src = inspect.getsource(QUERIES[twin])
-        assert kernel in src, (
-            f"{twin} no longer calls {kernel} — {exempt}'s exemption "
-            "rationale is stale"
-        )
-
-    # x32's kernel rides h3b via containment_keep -> containment_pairs
-    from insect_observation_data_pipeline_spark.llm.dedup import containment_keep
-
-    assert "containment_pairs" in inspect.getsource(containment_keep), (
-        "containment_keep no longer calls containment_pairs — "
-        "x32_containment's exemption rationale is stale"
-    )
-
-
-def test_green_summary_refuses_to_write_on_corrupt_artifact(tmp_path, monkeypatch):
-    """Round-12 follow-up: a corrupt committed CORRECTNESS artifact must
-    make tools/green_summary.py refuse to WRITE the summary (not merely
-    exit nonzero after writing): a flow ignoring the exit code would
-    otherwise commit a fold silently missing that round's greens, and
-    import never re-reads artifacts at or below folded_through."""
-    import json
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    from tools import green_summary
-
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"qa": {"hash_match": True}})
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_bytes(b"\xff\xfecorrupt")
-    monkeypatch.setattr(green_summary, "REPO", tmp_path)
-    rc = green_summary.main()
-    assert rc == 1
-    assert not (tmp_path / "GREEN_SUMMARY.json").exists()
-
-    # with the corruption repaired, the fold writes and exits 0
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({"qa": {"hash_match": True}})
-    )
-    assert green_summary.main() == 0
-    got = json.loads((tmp_path / "GREEN_SUMMARY.json").read_text())
-    assert got["folded_through"] == 2 and got["last_green"] == {"qa": 2}
 
 
 def test_readme_test_count_floor():

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -177,9 +178,23 @@ _PROP_INSTS = [
     ("Annex", None, None),      # institution with no city
 ]
 
-# institutions-batch silver, built from _PROP_INSTS and localCheckpointed
-# on first use (constant across hypothesis examples; see the test body)
-_PROP_INST_SILVER = None
+
+@pytest.fixture(scope="session")
+def prop_inst_silver(spark):
+    """The institutions-batch silver built from _PROP_INSTS, materialized
+    once per session: it is constant across every hypothesis example,
+    and replaying the whole institutions batch inside each example's
+    collect made this one test 132 s of the suite. Scoped to the session
+    that owns the localCheckpointed RDDs."""
+    from insect_observation_data_pipeline_spark.etl import etl1
+
+    inst_stg = spark.createDataFrame(
+        [(n, c, cty, "United Kingdom") for n, c, cty in _PROP_INSTS],
+        "institution string, city string, county string, country string",
+    )
+    r1 = etl1.load_institutions(inst_stg)
+    return {k: df.localCheckpoint() for k, df in r1.silver.items()}
+
 
 _aff_rows = st.lists(
     st.tuples(
@@ -196,7 +211,7 @@ _aff_rows = st.lists(
 
 @given(_aff_rows)
 @settings(max_examples=12, deadline=None)
-def test_user_histories_match_python_model(spark, rows):
+def test_user_histories_match_python_model(spark, prop_inst_silver, rows):
     import datetime
 
     from insect_observation_data_pipeline_spark.etl import etl1
@@ -205,20 +220,6 @@ def test_user_histories_match_python_model(spark, rows):
     base = datetime.date(2020, 1, 1)
     day = lambda off: (base + datetime.timedelta(days=off)).isoformat()
 
-    # the institutions side is CONSTANT across every hypothesis example —
-    # build + materialize it once per session (round-16, VERDICT r15 #1:
-    # each of the 12 examples replayed the whole institutions batch
-    # inside both collects; this one test was 132 of the suite's 2749 s)
-    global _PROP_INST_SILVER
-    if _PROP_INST_SILVER is None:
-        inst_stg = spark.createDataFrame(
-            [(n, c, cty, "United Kingdom") for n, c, cty in _PROP_INSTS],
-            "institution string, city string, county string, country string",
-        )
-        r1 = etl1.load_institutions(inst_stg)
-        _PROP_INST_SILVER = {
-            k: df.localCheckpoint() for k, df in r1.silver.items()
-        }
     users_stg = spark.createDataFrame(
         [
             (f"X. {u.upper()}", u, f"{u}@x.org", inst, day(aoff), "", "",
@@ -230,7 +231,7 @@ def test_user_histories_match_python_model(spark, rows):
         " subscription_type string, subscription_start string,"
         " join_date string",
     )
-    r2 = etl1.load_users(users_stg, _PROP_INST_SILVER)
+    r2 = etl1.load_users(users_stg, prop_inst_silver)
     # ONE action per example (round-16): per-example cost here is
     # Catalyst planning of the deep SCD2 DAG, paid per ACTION — so the
     # two history tables are unioned into a single tagged projection

@@ -2508,6 +2508,10 @@ def test_stateful_idle_timeout_smoke(spark, tmp_path):
     got = {}
     deadline = _time.time() + 120
     while _time.time() < deadline:
+        err = q.exception()
+        if err is not None:
+            q.stop()
+            raise err
         got = {
             r["user_id"]: (r["n_events"], r["n_sessions"])
             for r in spark.sql("SELECT * FROM idle_smoke").collect()

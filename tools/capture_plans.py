@@ -1,8 +1,9 @@
 """Capture ``.explain("formatted")`` for queries into plans/<round>/.
 
-Usage: python tools/capture_plans.py <suffix> [sf_dir] [query ...]
+Usage: python tools/capture_plans.py <suffix> [--sf-dir DIR] [query ...]
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<suffix>.txt for each
-query (suffix is "before" / "after"; round defaults to r16).
+query (suffix is "before" / "after"; round defaults to r16). DIR
+defaults to the sf0.1 testdata; every other argument is a query name.
 """
 
 from __future__ import annotations
@@ -23,11 +24,15 @@ def main() -> None:
     suffix = sys.argv[1]
     args = sys.argv[2:]
     sf_dir = "/root/testdata/sf0.1"
-    # ADVICE r15: only treat args[0] as sf_dir when it is NOT a known
-    # query name — a same-named directory in the cwd must not silently
-    # flip a one-query capture into a 120-query run
-    if args and args[0] not in QUERIES and os.path.isdir(args[0]):
-        sf_dir, args = args[0], args[1:]
+    # an explicit flag, so a path and a query name can never be mistaken
+    # for each other
+    if args[:1] == ["--sf-dir"]:
+        if len(args) < 2:
+            sys.exit(__doc__)
+        sf_dir, args = args[1], args[2:]
+    unknown = set(args) - set(QUERIES)
+    if unknown:
+        sys.exit(f"unknown queries: {sorted(unknown)}")
     names = args or list(QUERIES)
     out_dir = os.path.join(
         REPO_ROOT, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r16")

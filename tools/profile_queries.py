@@ -89,13 +89,13 @@ def profile(spark, sf_dir: str, names: list[str]) -> dict:
             for st in attempts:
                 if st.get("status") == "SKIPPED":
                     continue
-                sid = st.get("stageId", -1)
+                st_id = st.get("stageId", -1)
                 if (
-                    sid not in latest
+                    st_id not in latest
                     or st.get("attemptId", 0)
-                    > latest[sid].get("attemptId", 0)
+                    > latest[st_id].get("attemptId", 0)
                 ):
-                    latest[sid] = st
+                    latest[st_id] = st
             for st in latest.values():
                 agg["n_stages"] += 1
                 agg["task_time_ms"] += st.get("executorRunTime", 0)

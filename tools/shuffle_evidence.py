@@ -19,10 +19,8 @@ the binding-regime direction is pinned by
 tests/test_plans.py::test_w2b_register_shuffle_bounded_vs_exact_distinct
 with synthetic high-cardinality groups on the same metric source.
 
-Writes SHUFFLE_EVIDENCE_r{N}.json (round from committed driver
-artifacts, like bench.py's local artifact naming).
-
-Usage: python tools/shuffle_evidence.py [out.json]
+Usage: python tools/shuffle_evidence.py [out.json]   (default
+SHUFFLE_EVIDENCE.json)
 """
 
 from __future__ import annotations
@@ -79,16 +77,7 @@ def _context_counts(spark, sf_dir: str) -> dict:
 
 
 def main() -> int:
-    out_path = None
-    if len(sys.argv) > 1:
-        out_path = sys.argv[1]
-    else:
-        import bench
-
-        here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        out_path = os.path.join(
-            here, f"SHUFFLE_EVIDENCE_r{bench._current_round():02d}.json"
-        )
+    out_path = sys.argv[1] if len(sys.argv) > 1 else "SHUFFLE_EVIDENCE.json"
     from tools.compare import artifact_meta
 
     spark = get_spark()
