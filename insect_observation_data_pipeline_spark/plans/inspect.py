@@ -1,238 +1,144 @@
 """Physical-plan introspection: make scale properties assertable.
 
 The 100 TB posture lives or dies on plan shape, not code style. These
-helpers parse ``explain('formatted')`` output so tests can assert the
-properties that matter:
+helpers walk Spark's plan trees over py4j — node classes and their
+accessors, never ``explain`` text, so a change to Spark's plan-string
+format cannot blind them — and let tests assert that filters reached
+the scan, columns were pruned, small dims broadcast, no cartesian
+product slipped in and whole-stage codegen covers the hot path.
 
-- filters reached the parquet scan (PushedFilters),
-- column pruning happened (ReadSchema width),
-- small dims broadcast (BroadcastHashJoin / BroadcastNestedLoopJoin),
-- no accidental CartesianProduct,
-- whole-stage codegen covers the hot path.
-
-Parsing explain text is inherently version-coupled; these are test/debug
-aids, not runtime dependencies.
+A DataFrame's physical plan is the pre-execution plan until an action
+runs; a caller that needs AQE's final plan runs ``df.collect()`` first.
+These are test/debug aids, not runtime dependencies.
 """
 
 from __future__ import annotations
 
-import io
 import re
-from contextlib import redirect_stdout
+from collections import Counter
+from collections.abc import Iterator
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 
-def formatted_plan(df: DataFrame) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+def _seq(s) -> list:
+    """A py4j-held Scala ``Seq`` as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
 
 
-def simple_plan(df: DataFrame) -> str:
-    """``explain()`` simple-mode text. Unlike formatted mode, exchange
-    nodes here carry their partitioning inline ("Exchange
-    hashpartitioning(...)"), so shuffle counting must use THIS form —
-    formatted mode splits the arguments onto separate lines and a
-    substring count silently reads 0."""
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain()
-    return buf.getvalue()
+def node_class(node) -> str:
+    """Simple JVM class name of a plan node (``SortMergeJoinExec``)."""
+    return node.getClass().getSimpleName()
 
 
-def executed_plan_string(df: DataFrame) -> str:
-    """Final physical plan AFTER running the query (empty string if the
-    run fails). Under AQE this is the only form that shows the real
-    story: WholeStageCodegen subtrees exist only once stages
-    materialize, and runtime re-plans (broadcast conversion, skew
-    splits, coalesced partitions) appear nowhere else. Executes the
-    DataFrame's OWN query execution (collect) — a noop-sink write would
-    finalize the write command's separate QueryExecution and leave this
-    df's AdaptiveSparkPlanExec untouched (observed: codegen invisible)."""
-    try:
-        df.collect()
-        return df._jdf.queryExecution().executedPlan().toString()
-    except Exception:  # noqa: BLE001 — audit aid, never the gate
-        return ""
+def plan_nodes(root) -> Iterator[tuple[str, object]]:
+    """``(class name, node)`` for every node of a JVM plan tree (physical
+    or logical), each node once, pre-order.
+
+    Descends ``AdaptiveSparkPlanExec`` into ``executedPlan()`` (the
+    initial plan before an action, the final one after), any
+    ``*QueryStageExec`` into ``plan()``, and every other node into
+    ``children()`` and ``innerChildren()``, which hold subqueries and a
+    cached ``InMemoryRelation``'s plan. ``ReusedExchangeExec`` has
+    neither, so the exchange it reuses counts once, where it ran.
+    Subqueries are walked after the main tree, the order ``explain``
+    lists them in. A node reachable twice (one cached plan read by two
+    scans) is yielded once, tracked by JVM identity."""
+    seen = SparkContext._jvm.java.util.IdentityHashMap()
+    stack, subqueries = [root], []
+    while stack or subqueries:
+        node = stack.pop() if stack else subqueries.pop(0)
+        if seen.put(node, True) is not None:
+            continue
+        name = node_class(node)
+        yield name, node
+        if name == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif name.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        else:
+            kids = _seq(node.children())
+            for c in _seq(node.innerChildren()):
+                (subqueries if "Subquery" in node_class(c) else kids).append(c)
+        stack.extend(reversed(kids))
+
+
+def node_classes(root) -> Counter[str]:
+    """How many nodes of each class the tree under ``root`` holds."""
+    return Counter(name for name, _ in plan_nodes(root))
+
+
+def physical_plan(df: DataFrame):
+    """The JVM physical plan of ``df`` (AQE's final plan once an action
+    has run on this DataFrame)."""
+    return df._jdf.queryExecution().executedPlan()
+
+
+def _nodes_of(df: DataFrame, *classes: str) -> list:
+    return [n for name, n in plan_nodes(physical_plan(df)) if name in classes]
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
-    """All PushedFilters entries across scans, one WHOLE entry per item.
-
-    Bracket-matched + top-level split (round-12 review): the old
-    ``[^\\]]*`` regex truncated the list at the first ``]`` inside an
-    ``In(col, [a,b])`` entry — silently dropping every later pushed
-    filter — and a flat ``split(',')`` sheared two-argument entries
-    like ``GreaterThan(l_quantity,45.0)`` into fragments no assertion
-    could ever match."""
-    plan = formatted_plan(df)
-    out: list[str] = []
-    marker = "PushedFilters: ["
-    pos = 0
-    while True:
-        start = plan.find(marker, pos)
-        if start < 0:
-            break
-        i, depth = start + len(marker), 1
-        while i < len(plan) and depth:
-            if plan[i] == "[":
-                depth += 1
-            elif plan[i] == "]":
-                depth -= 1
-            i += 1
-        entry = plan[start + len(marker) : i - 1].strip()
-        if entry:
-            out.extend(
-                p.strip() for p in _split_top_level(entry) if p.strip()
-            )
-        pos = i
-    return out
+    """All filters pushed into file scans, one whole entry per item
+    (``In(k, [1,2,3])``, ``GreaterThan(v,45.0)``)."""
+    return [
+        str(f)
+        for scan in _nodes_of(df, "FileSourceScanExec")
+        for f in _seq(scan.pushedDownFilters())
+    ]
 
 
 def read_schema_columns(df: DataFrame) -> list[list[str]]:
-    """TOP-LEVEL column lists read by each parquet scan (pruning check).
-
-    Angle-bracket matched + top-level split (round-13 review, the same
-    defect class as round-12's pushed_filters fix): the old
-    ``struct<([^>]*)>`` regex stopped at the FIRST ``>`` and the flat
-    ``split(',')`` then minted phantom columns from nested struct
-    fields — ``struct<a:int,b:struct<c:int,d:int>>`` read back as
-    ``['a', 'b', 'd']``."""
-    plan = formatted_plan(df)
-    out = []
-    marker = "ReadSchema: struct<"
-    pos = 0
-    while True:
-        start = plan.find(marker, pos)
-        if start < 0:
-            break
-        i, depth = start + len(marker), 1
-        while i < len(plan) and depth:
-            if plan[i] == "<":
-                depth += 1
-            elif plan[i] == ">":
-                depth -= 1
-            i += 1
-        body = plan[start + len(marker) : i - 1]
-        cols, d, cur = [], 0, []
-        for ch in body + ",":
-            if ch in "<(":
-                d += 1
-            elif ch in ">)":
-                d -= 1
-            if ch == "," and d == 0:
-                seg = "".join(cur).strip()
-                if seg:
-                    cols.append(seg.split(":", 1)[0].strip())
-                cur = []
-            else:
-                cur.append(ch)
-        out.append(cols)
-        pos = i
-    return out
-
-
-def _balanced_args(txt: str, start: int) -> str:
-    """Return the argument string of the call whose '(' is at ``start``,
-    consuming nested parens correctly."""
-    depth = 0
-    for i in range(start, len(txt)):
-        c = txt[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return txt[start + 1 : i]
-    return txt[start + 1 :]
-
-
-def _split_top_level(args: str) -> list[str]:
-    """Split on commas at paren/bracket depth 0 only (``round(x, 2)
-    ASC`` and ``In(col, [a,b])`` each stay one segment)."""
-    out, depth, cur = [], 0, []
-    for c in args:
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        if c == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    out.append("".join(cur))
-    return out
+    """TOP-LEVEL column names read by each file scan (pruning check)."""
+    return [
+        list(scan.requiredSchema().fieldNames())
+        for scan in _nodes_of(df, "FileSourceScanExec")
+    ]
 
 
 def unpartitioned_windows(df: DataFrame) -> int:
-    """Count window specs with NO partition columns — global sorts that
-    funnel every row through one partition (the scale killer the hashed
-    surrogate keys removed; assert 0 in ETL plans).
-
-    In the analyzed plan a spec prints as
-    ``windowspecdefinition([part cols,] order col ASC|DESC ..., frame)``;
-    partition columns never carry a sort direction, so a first top-level
-    segment with ASC/DESC (or going straight to the frame) means
-    unpartitioned. Parsing is paren-aware: an order expression containing
-    commas or nested parens (``round(x, 2) ASC``) cannot split
-    mid-expression and silently hide a global sort.
-    """
-    txt = df._jdf.queryExecution().analyzed().toString()
-    n = 0
-    for m in re.finditer(r"windowspecdefinition\(", txt):
-        args = _balanced_args(txt, m.end() - 1)
-        first = _split_top_level(args)[0]
-        if (
-            " ASC" in first
-            or " DESC" in first
-            or first.strip().startswith("specifiedwindowframe")
-        ):
-            n += 1
-    return n
+    """Count window operators with NO partition columns — global sorts
+    that funnel every row through one partition (the scale killer the
+    hashed surrogate keys removed; assert 0 in ETL plans). Read from the
+    analyzed plan, before the optimizer can merge or drop windows."""
+    analyzed = df._jdf.queryExecution().analyzed()
+    return sum(
+        1
+        for name, n in plan_nodes(analyzed)
+        if name == "Window" and n.partitionSpec().isEmpty()
+    )
 
 
 def join_key_names(df: DataFrame) -> list[list[str]]:
-    """Equi-join key column names per join side, from the formatted plan's
-    ``Left keys``/``Right keys`` lines — lets tests assert that a salting
-    rewrite really moved the salt columns into the shuffle key."""
-    plan = formatted_plan(df)
+    """Equi-join key names per join side (left, then right, per join),
+    ``#id`` suffixes stripped — lets tests assert that a salting rewrite
+    really moved the salt columns into the shuffle key."""
     out: list[list[str]] = []
-    # bracket-matched like pushed_filters (round-13 review): the old
-    # [^\]]* regex stopped at a ']' INSIDE a key expression (e.g.
-    # arr#3[0]), truncating the key list
-    for m in re.finditer(r"(?:Left|Right) keys(?: \[\d+\])?: \[", plan):
-        i, depth = m.end(), 1
-        while i < len(plan) and depth:
-            if plan[i] == "[":
-                depth += 1
-            elif plan[i] == "]":
-                depth -= 1
-            i += 1
-        entry = plan[m.end() : i - 1]
-        cols = [
-            re.sub(r"#\d+L?", "", c).strip()
-            for c in _split_top_level(entry)
-            if c.strip()
-        ]
-        out.append(cols)
+    for j in _nodes_of(
+        df, "BroadcastHashJoinExec", "ShuffledHashJoinExec", "SortMergeJoinExec"
+    ):
+        for keys in (j.leftKeys(), j.rightKeys()):
+            out.append([re.sub(r"#\d+L?", "", str(k)) for k in _seq(keys)])
     return out
 
 
+# node classes behind each plan_flags key
+_FLAG_CLASSES = {
+    "broadcast_hash_join": {"BroadcastHashJoinExec"},
+    "broadcast_nested_loop_join": {"BroadcastNestedLoopJoinExec"},
+    "sort_merge_join": {"SortMergeJoinExec"},
+    "shuffled_hash_join": {"ShuffledHashJoinExec"},
+    "cartesian_product": {"CartesianProductExec"},
+    "whole_stage_codegen": {"WholeStageCodegenExec"},
+    "take_ordered": {"TakeOrderedAndProjectExec"},
+    "python_udf": {"BatchEvalPythonExec", "ArrowEvalPythonExec"},
+}
+
+
 def plan_flags(df: DataFrame) -> dict[str, bool]:
-    plan = formatted_plan(df)
-    return {
-        "broadcast_hash_join": "BroadcastHashJoin" in plan,
-        "broadcast_nested_loop_join": "BroadcastNestedLoopJoin" in plan,
-        "sort_merge_join": "SortMergeJoin" in plan,
-        "shuffled_hash_join": "ShuffledHashJoin" in plan,
-        "cartesian_product": "CartesianProduct" in plan,
-        "whole_stage_codegen": "WholeStageCodegen" in plan or "codegen id" in plan,
-        "take_ordered": "TakeOrderedAndProject" in plan,
-        "python_udf": "BatchEvalPython" in plan or "ArrowEvalPython" in plan,
-    }
+    present = node_classes(physical_plan(df)).keys()
+    return {k: not present.isdisjoint(v) for k, v in _FLAG_CLASSES.items()}
 
 
 def _stage_seq(spark):
@@ -280,7 +186,7 @@ def shuffle_write_stages(df: DataFrame) -> list[dict]:
         s = seq.apply(i)
         if s.stageId() in before:
             continue
-        if s.status().toString() == "SKIPPED":
+        if str(s.status()) == "SKIPPED":
             skipped.append(s.stageId())
             continue
         out.append(

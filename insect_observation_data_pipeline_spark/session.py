@@ -47,6 +47,8 @@ def session_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         # Parquet scans: vectorized reader + pushdown are on by default;
         # keep splits big enough that sf0.1 files don't over-partition.
         "spark.sql.files.maxPartitionBytes": "134217728",
+        # no [Stage n:> bars interleaved with a tool's own output
+        "spark.ui.showConsoleProgress": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     }
 

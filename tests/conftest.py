@@ -45,7 +45,7 @@ def spark():
             "tests",
             master="local[4]",
             shuffle_partitions=4,
-            extra_conf={"spark.ui.showConsoleProgress": "false", "spark.ui.enabled": "false"},
+            extra_conf={"spark.ui.enabled": "false"},
         )
     s.sparkContext.setLogLevel("ERROR")
     yield s

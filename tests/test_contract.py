@@ -58,7 +58,10 @@ def test_sql_surface_matches_dataframe(spark):
 def test_write_partitioned_prunes(spark, tmp_path):
     """Partition filters prune at plan time: a filtered read touches only
     the matching partition directories."""
-    from insect_observation_data_pipeline_spark.plans import formatted_plan
+    from insect_observation_data_pipeline_spark.plans.inspect import (
+        physical_plan,
+        plan_nodes,
+    )
     from insect_observation_data_pipeline_spark.sources.parquet import read_table, write_partitioned
 
     out = str(tmp_path / "orders_part")
@@ -70,14 +73,14 @@ def test_write_partitioned_prunes(spark, tmp_path):
         sort_by=("o_orderdate",),
     )
     df = spark.read.parquet(out).filter("o_status = 'F'")
-    plan = formatted_plan(df)
-    # the partition predicate moves into PartitionFilters (plan-time
-    # directory pruning), not PushedFilters / post-scan Filter
-    assert "PartitionFilters" in plan
-    import re
-
-    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert pf and "o_status" in pf.group(1)
+    # the partition predicate moves into the scan's partitionFilters
+    # (plan-time directory pruning), not PushedFilters / post-scan Filter
+    pf = [
+        str(scan.partitionFilters())
+        for name, scan in plan_nodes(physical_plan(df))
+        if name == "FileSourceScanExec"
+    ]
+    assert pf and "o_status" in pf[0], pf
     assert df.count() == orders.filter("o_orderstatus = 'F'").count()
 
 

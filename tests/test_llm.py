@@ -2770,12 +2770,15 @@ def test_unicode_census_plan_is_one_scan_mapinpandas(spark):
     """x49 must plan as ONE documents scan through a single MapInPandas
     boundary into a partial-aggregated groupBy — no row-at-a-time
     Python UDF, no extra exchange beyond the tiny-domain agg."""
-    from insect_observation_data_pipeline_spark.plans import plan_flags
+    from insect_observation_data_pipeline_spark.plans.inspect import (
+        node_classes,
+        physical_plan,
+        plan_flags,
+    )
     from insect_observation_data_pipeline_spark.queries import QUERIES
 
     df = QUERIES["x49_unicode_census"](spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1
+    assert node_classes(physical_plan(df))["MapInPandasExec"] == 1
     flags = plan_flags(df)
     assert not flags["python_udf"]
     assert not flags["cartesian_product"]

@@ -205,7 +205,10 @@ def test_merge_upsert_semantics(spark):
 def test_bucketed_join_has_no_shuffle(spark):
     """Same-key same-count bucketed tables sort-merge join without an
     Exchange on either side (the persisted pre-shuffle)."""
-    from insect_observation_data_pipeline_spark.plans import formatted_plan
+    from insect_observation_data_pipeline_spark.plans.inspect import (
+        node_classes,
+        physical_plan,
+    )
     from insect_observation_data_pipeline_spark.sources.parquet import read_table, write_bucketed
 
     sf = "/root/testdata/sf0.001"
@@ -226,9 +229,9 @@ def test_bucketed_join_has_no_shuffle(spark):
             joined = o.join(c, o["o_custkey"] == c["c_custkey"]).select(
                 "o_orderkey", "c_name"
             )
-            plan = formatted_plan(joined)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan
+            classes = node_classes(physical_plan(joined))
+            assert classes["SortMergeJoinExec"]
+            assert not any("Exchange" in c for c in classes), classes
             assert joined.count() > 0
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -318,7 +321,7 @@ def test_salted_join_hot_key_volume_and_plan(spark):
     inner join must (a) put __salt in the shuffle key (plan-asserted)
     and (b) return exactly the plain join's row count."""
     from insect_observation_data_pipeline_spark.operators import salted_join
-    from insect_observation_data_pipeline_spark.plans import join_key_names
+    from insect_observation_data_pipeline_spark.plans.inspect import join_key_names
 
     n = 300_000
     large = spark.range(n).select(

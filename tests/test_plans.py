@@ -7,12 +7,15 @@ cartesian products, no Python UDFs in hot paths.
 
 from __future__ import annotations
 
-from insect_observation_data_pipeline_spark.plans import (
-    executed_plan_string,
-    formatted_plan,
+from insect_observation_data_pipeline_spark.plans.inspect import (
+    node_class,
+    node_classes,
+    physical_plan,
     plan_flags,
+    plan_nodes,
     pushed_filters,
     read_schema_columns,
+    unpartitioned_windows,
 )
 from insect_observation_data_pipeline_spark.queries import QUERIES
 
@@ -20,23 +23,34 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_audit_counters_see_exchanges_and_codegen(spark):
-    """Integrity of the PLANS_r{N}.json counters (r5/r6 silently
-    recorded 0 exchanges and no codegen for every query because the
-    substrings being counted never occur in formatted-mode explain):
-    the simple-mode text must carry inline 'Exchange hashpartitioning'
-    for a groupBy, and the post-execution plan must show codegen stage
-    markers."""
-    from insect_observation_data_pipeline_spark.plans import (
-        executed_plan_string,
-        simple_plan,
-    )
+    """Integrity of the tools/audit_plans.py counters (an audit that
+    counts nothing would report 0 exchanges and no codegen for every
+    query): a groupBy plans a ShuffleExchangeExec, and after collect()
+    the walk reaches AQE's final plan, whose materialized stages carry
+    WholeStageCodegenExec. The count descends into every query stage: a
+    two-sided SortMergeJoin with broadcast off ran exactly 2 shuffles."""
+    from pyspark.sql import functions as F
 
     df = QUERIES["q1_pricing_summary"](spark, SF)
-    sp = simple_plan(df)
-    assert "Exchange hashpartitioning" in sp or "Exchange rangepartitioning" in sp
-    executed = executed_plan_string(df)
-    assert executed and "isFinalPlan=true" in executed
-    assert "*(" in executed or "WholeStageCodegen" in executed
+    assert node_classes(physical_plan(df))["ShuffleExchangeExec"] > 0
+    df.collect()
+    root = physical_plan(df)
+    assert root.isFinalPlan()
+    final = node_classes(root)
+    assert final["ShuffleQueryStageExec"] > 0
+    assert final["WholeStageCodegenExec"] > 0
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        left = spark.range(200).select((F.col("id") % 50).alias("k"))
+        smj = left.join(spark.range(100).withColumnRenamed("id", "k"), "k")
+        smj.collect()
+        final = node_classes(physical_plan(smj))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert final["SortMergeJoinExec"] == 1
+    assert final["ShuffleExchangeExec"] == 2
 
 
 def test_filter_and_projection_pushdown(spark):
@@ -88,8 +102,6 @@ def test_all_queries_plan_invariants(spark):
     join keyed or broadcast), and no unpartitioned window (nothing
     funnels all rows through one task). A new query that violates any
     of these fails here before it ever reaches the driver."""
-    from insect_observation_data_pipeline_spark.plans import unpartitioned_windows
-
     bad = []
     for name, fn in QUERIES.items():
         df = fn(spark, SF)
@@ -103,24 +115,59 @@ def test_all_queries_plan_invariants(spark):
     assert not bad, "; ".join(bad)
 
 
+def test_unpartitioned_windows_counts_global_window(spark):
+    """A global window counts even when its order key is an expression
+    with a comma (round(x, 2)); partitioning the same window clears it."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    df = spark.range(100).select(
+        (F.col("id") / 7).alias("x"), (F.col("id") % 3).alias("g")
+    )
+    order = F.round("x", 2)
+    glob = Window.orderBy(order)
+    part = Window.partitionBy("g").orderBy(order)
+    assert unpartitioned_windows(df.withColumn("r", F.rank().over(glob))) == 1
+    assert unpartitioned_windows(df.withColumn("r", F.rank().over(part))) == 0
+
+
+def test_plan_flags_see_inside_persisted_frame(spark):
+    """A join planned inside a .persist()ed frame lives in the cached
+    InMemoryRelation's plan, which only innerChildren reaches."""
+    from pyspark.sql import functions as F
+
+    small = spark.range(10).withColumnRenamed("id", "k")
+    cached = (
+        spark.range(1000)
+        .withColumn("k", F.col("id") % 10)
+        .join(F.broadcast(small), "k")
+        .persist()
+    )
+    try:
+        assert plan_flags(cached.groupBy("k").count())["broadcast_hash_join"]
+    finally:
+        cached.unpersist()
+
+
 def test_embedding_dedup_blocked_not_cartesian(spark):
     """x11 must stay blocked by cell, never a global cross product: the
     gram kernel plans as ONE FlatMapGroupsInPandas keyed on the cell (the
     pair space exists only inside each Arrow batch, shuffled by cell), so
     no join node and no cartesian appears."""
     df = QUERIES["x11_dedup_embedding"](spark, SF)
-    flags = plan_flags(df)
-    assert not flags["cartesian_product"]
-    plan = formatted_plan(df)
-    assert "FlatMapGroupsInPandas" in plan
+    classes = node_classes(physical_plan(df))
+    assert not classes["CartesianProductExec"]
+    assert classes["FlatMapGroupsInPandasExec"]
 
 
 def test_multikey_anti_join_shape(spark):
     """J5 composite-key anti-join: hash/SMJ anti, scans pruned to the
     two key columns + filter column."""
     df = QUERIES["j5_multikey_anti"](spark, SF)
-    plan = formatted_plan(df)
-    assert "LeftAnti" in plan
+    assert any(
+        name.endswith("JoinExec") and str(n.joinType()) == "LeftAnti"
+        for name, n in plan_nodes(physical_plan(df))
+    )
     assert not plan_flags(df)["cartesian_product"]
     scans = read_schema_columns(df)
     assert scans and all(len(c) <= 3 for c in scans)
@@ -130,8 +177,7 @@ def test_upsert_recompute_uses_window_group_limit(spark):
     """u1's latest-per-key recompute plans with WindowGroupLimit (rank
     pre-filter before the full window sort) on Spark 4."""
     df = QUERIES["u1_upsert_last_wins"](spark, SF)
-    plan = formatted_plan(df)
-    assert "WindowGroupLimit" in plan
+    assert node_classes(physical_plan(df))["WindowGroupLimitExec"]
 
 
 def test_training_order_rank_window_is_sub_bucketed(spark):
@@ -142,17 +188,24 @@ def test_training_order_rank_window_is_sub_bucketed(spark):
     is the per-slice-count prefix sum, whose input is one row per
     slice. And the scalable plan must stay byte-identical to the naive
     single-window-per-shard form."""
-    import re
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     df = QUERIES["x35_training_order"](spark, SF)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    specs = re.findall(r"row_number\(\) windowspecdefinition\(([^)]*)\)", plan)
+    specs = []
+    for name, w in plan_nodes(df._jdf.queryExecution().optimizedPlan()):
+        if name != "Window":
+            continue
+        exprs, part = w.windowExpressions(), w.partitionSpec()
+        fns = {
+            node_class(exprs.apply(i).child().windowFunction())
+            for i in range(exprs.size())
+        }
+        if "RowNumber" in fns:
+            specs.append({part.apply(i).name() for i in range(part.size())})
     assert specs, "no row_number window in the x35 plan"
     for spec in specs:
-        assert "shard" in spec and "sub" in spec, (
+        assert {"shard", "sub"} <= spec, (
             f"rank window partitioned by constant-cardinality keys: {spec}"
         )
 
@@ -181,10 +234,8 @@ def test_dedup_index_joins_read_bucket_aligned(spark, tmp_path):
     """The streaming dedup index's scale claim, pinned at the plan
     level: with the index persisted as bucketed tables, the
     exact-fingerprint semi join and the LSH band candidate join both
-    scan the index 'Bucketed: true' — the ever-growing corpus side is
-    never re-shuffled per epoch; only the batch moves."""
-    import re
-
+    scan the index bucketed — the ever-growing corpus side is never
+    re-shuffled per epoch; only the batch moves."""
     from insect_observation_data_pipeline_spark.llm.dedup import incremental_dedup_indexed
     from insect_observation_data_pipeline_spark.streaming import dedup_ingest_sink
 
@@ -210,14 +261,17 @@ def test_dedup_index_joins_read_bucket_aligned(spark, tmp_path):
     out = incremental_dedup_indexed(
         index, spark.read.parquet(corpus), batch, band_index=bands
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
     scans = {}
-    for m in re.finditer(
-        r"FileScan parquet \S*(dedup_(?:bands|index)_\w+)\[([^\]]*)\][^\n]*", plan
-    ):
-        table, cols = m.group(1), m.group(2)
-        bucketed = "Bucketed: true" in m.group(0)
-        scans.setdefault((table, cols.split("#")[0].strip()), []).append(bucketed)
+    for name, scan in plan_nodes(physical_plan(out)):
+        if name != "FileSourceScanExec":
+            continue
+        ident = scan.tableIdentifier()
+        if ident.isEmpty() or not ident.get().table().startswith("dedup_"):
+            continue
+        first_col = scan.requiredSchema().fieldNames()[0]
+        scans.setdefault((ident.get().table(), first_col), []).append(
+            scan.bucketedScan()
+        )
     band_scans = [b for (t, _), bs in scans.items() for b in bs if "bands" in t]
     assert band_scans and all(band_scans), f"band scan not bucket-aligned: {scans}"
     fp_scans = [
@@ -235,25 +289,32 @@ def test_funnel_cascade_is_single_shuffle(spark):
     hash exchange on user_id. A second exchange means the agg stopped
     reusing the window's partitioning (or a join crept in)."""
     df = QUERIES["e6_funnel_steps"](spark, SF)
-    plan = executed_plan_string(df)
-    # AQE plan strings carry BOTH the final and the initial plan —
-    # count the final section only
-    final = plan.split("== Initial Plan ==")[0]
-    n_exchanges = sum(
-        1 for line in final.splitlines() if "Exchange hashpartitioning" in line
-    )
-    assert n_exchanges == 1, final
-    assert "Join" not in final
+    df.collect()
+    final = list(plan_nodes(physical_plan(df)))
+    hash_exchanges = [
+        n
+        for name, n in final
+        if name == "ShuffleExchangeExec"
+        and node_class(n.outputPartitioning()) == "HashPartitioning"
+    ]
+    classes = [name for name, _ in final]
+    assert len(hash_exchanges) == 1, classes
+    assert not any("Join" in c for c in classes), classes
 
 
 def test_band_join_plans_as_equi_join(spark):
     """j14's bucketized rewrite must plan the band predicate as an
     equi-join residual — never CartesianProduct/BroadcastNestedLoop."""
     df = QUERIES["j14_band_join_coincident"](spark, SF)
-    plan = executed_plan_string(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
-    assert "HashJoin" in plan or "SortMergeJoin" in plan
+    df.collect()
+    flags = plan_flags(df)
+    assert not flags["cartesian_product"]
+    assert not flags["broadcast_nested_loop_join"]
+    assert (
+        flags["broadcast_hash_join"]
+        or flags["shuffled_hash_join"]
+        or flags["sort_merge_join"]
+    )
 
 
 def test_weighted_sample_topk_is_take_ordered(spark):
@@ -262,13 +323,12 @@ def test_weighted_sample_topk_is_take_ordered(spark):
     shuffle of losers) — the property that makes 'keep k docs,
     favor quality' viable over a 100 TB corpus."""
     from insect_observation_data_pipeline_spark.llm.curation import weighted_sample
-    from insect_observation_data_pipeline_spark.plans import simple_plan
 
     df = spark.range(1000).selectExpr(
         "id AS doc_id", "cast(1 + id % 7 AS double) AS w"
     )
     out = weighted_sample(df, weight_col="w", key_col="doc_id", k=10, seed="s")
-    assert "TakeOrderedAndProject" in simple_plan(out)
+    assert plan_flags(out)["take_ordered"]
 
 
 def test_w2b_register_shuffle_bounded_vs_exact_distinct(spark):
@@ -288,7 +348,7 @@ def test_w2b_register_shuffle_bounded_vs_exact_distinct(spark):
         hll_registers,
         hll_state,
     )
-    from insect_observation_data_pipeline_spark.plans import shuffle_write_totals
+    from insect_observation_data_pipeline_spark.plans.inspect import shuffle_write_totals
 
     TASKS, GROUPS = 8, 4
 
@@ -346,7 +406,7 @@ def test_shuffle_measurement_fails_loudly_when_vacuous(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from insect_observation_data_pipeline_spark.plans import (
+    from insect_observation_data_pipeline_spark.plans.inspect import (
         shuffle_write_stages,
         shuffle_write_totals,
     )
@@ -367,13 +427,9 @@ def test_shuffle_measurement_fails_loudly_when_vacuous(spark):
 
 
 def test_pushed_filters_returns_whole_entries(spark, tmp_path):
-    """Round-12 review: the old regex truncated PushedFilters at the
-    first ']' inside an In(col, [...]) entry and the flat comma split
-    sheared GreaterThan(col,45.0) into fragments — a pruning audit
-    under-reported pushdown and no assertion on a whole entry could
-    match. Entries must come back complete."""
-    from insect_observation_data_pipeline_spark.plans import pushed_filters
-
+    """Pushed filters come back as whole entries, one per filter:
+    In(col, [...]) with its list, GreaterThan(col,45.0) with both
+    arguments, so an assertion can match a whole entry."""
     p = str(tmp_path / "t.parquet")
     spark.range(100).selectExpr(
         "id", "id % 7 AS k", "CAST(id AS DOUBLE) AS v"
@@ -394,8 +450,7 @@ def test_pushed_filters_returns_whole_entries(spark, tmp_path):
 
 
 def test_read_schema_columns_nested_struct(spark, tmp_path):
-    """Round-13 review: nested struct fields must not mint phantom
-    top-level columns or truncate at the first '>'."""
+    """Nested struct fields do not appear as top-level columns."""
     p = str(tmp_path / "nested.parquet")
     spark.createDataFrame(
         [(1, (2, 3), 4)], "a int, b struct<c:int, d:int>, e int"
@@ -406,9 +461,7 @@ def test_read_schema_columns_nested_struct(spark, tmp_path):
 
 
 def test_read_schema_columns_parenthesized_types(spark, tmp_path):
-    """Round-14 ADVICE: parenthesized type args (decimal(10,2)) must not
-    split into phantom columns — commas inside '(' ')' are not
-    top-level either."""
+    """A parenthesized type (decimal(10,2)) is one column."""
     from decimal import Decimal
 
     p = str(tmp_path / "dec.parquet")

@@ -2,10 +2,11 @@
 
 Writes one JSON object per query with the physical-plan flags the test
 suite gates on (tests/test_plans.py::test_all_queries_plan_invariants)
-plus shuffle/scan shape counts — a committed, judge-readable artifact
-(PLANS_r{N}.json) proving no registered query ships a row-at-a-time
-Python UDF, a cartesian product, or an unpartitioned window, and showing
-each query's exchange count and scan column pruning.
+plus shuffle/scan shape counts — an artifact proving no registered
+query ships a row-at-a-time Python UDF, a cartesian product, or an
+unpartitioned window, and showing each query's exchange count and scan
+column pruning. Exits 1 on a violation, and names the query whose run
+failed if one does.
 
 Usage: python tools/audit_plans.py [out.json] [sf_dir]
 """
@@ -14,20 +15,16 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 
-# anchor on __file__, not cwd (round-14 review: '.' made both the
-# package import and the late tools.compare import fail — the latter
-# only AFTER the full multi-minute audit — when run from outside the
-# repo root; every sibling tool already anchors this way)
+# anchor on __file__, not cwd, so the tool runs from outside the repo root
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from insect_observation_data_pipeline_spark.plans.inspect import (  # noqa: E402
-    executed_plan_string,
+    node_classes,
+    physical_plan,
     plan_flags,
     read_schema_columns,
-    simple_plan,
     unpartitioned_windows,
 )
 from insect_observation_data_pipeline_spark.queries import QUERIES  # noqa: E402
@@ -44,50 +41,22 @@ def main() -> None:
         df = fn(spark, sf_dir)
         flags = plan_flags(df)
         scans = read_schema_columns(df)
-        # exchange/broadcast counts come from the FINAL EXECUTED plan
-        # (round-12 review): it is the plan the engine actually ran —
-        # AQE runtime re-plans (SMJ->broadcast conversion, coalesced
-        # shuffles) appear nowhere else — each node prints exactly once
-        # (formatted mode lists every node twice, which doubled
-        # broadcast_exchanges in PLANS_r<=12), and the line-anchored
-        # regex counts EVERY shuffle flavor (hash/range/SinglePartition/
-        # round-robin; the old simple-mode substring count missed the
-        # final shuffle of every global aggregate) while never matching
-        # ReusedExchange. The string is sliced at "== Initial Plan =="
-        # because AQE's toString appends the pre-execution tree too.
-        # Codegen also needs the executed plan (AQE materializes
-        # WholeStageCodegen only as stages run). Simple mode remains the
-        # fallback for a query whose collect failed.
-        splan = simple_plan(df)
-        executed = executed_plan_string(df)
-        final = executed.split("== Initial Plan ==")[0]
-        ex_re = re.compile(r"(?m)^[\s+:\-*()0-9]*Exchange ")
-        bx_re = re.compile(r"(?m)^[\s+:\-*()0-9]*BroadcastExchange ")
+        # exchange, broadcast and codegen counts come from the FINAL
+        # plan: AQE re-plans at run time (SMJ->broadcast conversion,
+        # coalesced shuffles) and inserts WholeStageCodegen only as its
+        # stages materialize, so the pre-execution tree shows neither
+        try:
+            df.collect()
+        except Exception as e:  # noqa: BLE001 — name the query, then fail
+            sys.exit(f"{name}: collect failed: {type(e).__name__}: {e}")
+        final = node_classes(physical_plan(df))
         results[name] = {
             **flags,
-            # the executed-plan string renders codegen spans as "*(N)"
-            # stage markers, not the literal node name
-            "whole_stage_codegen": (
-                "*(" in executed
-                or "WholeStageCodegen" in executed
-                or flags["whole_stage_codegen"]
-            ),
+            "whole_stage_codegen": final["WholeStageCodegenExec"] > 0,
             "unpartitioned_windows": unpartitioned_windows(df),
-            "exchanges": (
-                len(ex_re.findall(final))
-                if executed
-                else (
-                    splan.count("Exchange hashpartitioning")
-                    + splan.count("Exchange rangepartitioning")
-                    + splan.count("Exchange SinglePartition")
-                )
-            ),
-            "broadcast_exchanges": (
-                len(bx_re.findall(final))
-                if executed
-                else splan.count("BroadcastExchange")
-            ),
-            "executed": bool(executed),
+            "exchanges": final["ShuffleExchangeExec"],
+            "broadcast_exchanges": final["BroadcastExchangeExec"],
+            "executed": True,
             "scan_columns": [len(c) for c in scans],
         }
         print(name, "ok")

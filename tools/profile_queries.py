@@ -6,14 +6,20 @@ http://localhost:<ui-port>/api/v1 and aggregate
   - n_jobs: distinct Spark jobs the one invocation launched (driver
     round-trips: eager persists, count() probes, iterative steps),
   - task_time_ms: summed executor run time across stages,
-  - shuffle_read/write bytes, input bytes, spill bytes.
+  - shuffle_read/write bytes, input bytes, spill bytes,
+  - stages: one row per stage (id, executor run time, tasks, I/O, spill,
+    first line of the stage name), slowest first — WHICH stage
+    inside a multi-job query burns the time.
 
 This is the guide-§1 "empirical" loop in script form (no interactive UI
 in this sandbox). Wall-clock here is single-run and NOT comparable to
 bench.py medians — use it only to rank where time goes inside a query.
 
-Usage: python tools/profile_queries.py [sf_dir] [query ...]
-Writes /tmp/profile_queries.json and prints a table.
+Usage: python tools/profile_queries.py [--sf-dir DIR] [query ...]
+DIR defaults to the sf0.1 testdata; every other argument is a query
+name, and no names means every registered query. Writes
+/tmp/profile_queries.json and prints a table, then each query's
+slowest stages.
 """
 
 from __future__ import annotations
@@ -34,6 +40,25 @@ from insect_observation_data_pipeline_spark.queries import QUERIES  # noqa: E402
 def _get(url: str):
     with urllib.request.urlopen(url, timeout=10) as r:
         return json.loads(r.read().decode())
+
+
+# aggregate and per-stage MB fields, from the REST API's byte counters
+_MB_FIELDS = {
+    "input_mb": "inputBytes",
+    "shuffle_read_mb": "shuffleReadBytes",
+    "shuffle_write_mb": "shuffleWriteBytes",
+    "spill_mb": "diskBytesSpilled",
+}
+
+
+def _stage_row(st: dict) -> dict:
+    return {
+        "stage_id": st["stageId"],
+        "task_time_ms": st.get("executorRunTime", 0),
+        "n_tasks": st.get("numCompleteTasks", 0),
+        **{k: round(st.get(f, 0) / 1e6, 2) for k, f in _MB_FIELDS.items()},
+        "name": (st.get("name") or "").partition("\n")[0][:90],
+    }
 
 
 def profile(spark, sf_dir: str, names: list[str]) -> dict:
@@ -66,57 +91,46 @@ def profile(spark, sf_dir: str, names: list[str]) -> dict:
             if j.get("jobGroup") == name
         ]
         stage_ids = sorted({s for j in jobs for s in j.get("stageIds", [])})
-        agg = {
-            "wall_s": round(wall, 3),
-            "n_jobs": len(jobs),
-            "n_stages": 0,
-            "task_time_ms": 0,
-            "input_mb": 0.0,
-            "shuffle_read_mb": 0.0,
-            "shuffle_write_mb": 0.0,
-            "spill_mb": 0.0,
-            "n_tasks": 0,
-            "err": err,
-        }
-        for sid in stage_ids:
+        rows = []
+        for st_id in stage_ids:
             try:
-                attempts = _get(f"{base}/stages/{sid}")
+                attempts = _get(f"{base}/stages/{st_id}")
             except Exception:  # noqa: BLE001 — skipped/missing stage
                 continue
             # ADVICE r15: a failed-and-retried stage must not be
             # double-counted — keep only the latest attempt per stage
-            latest: dict[int, dict] = {}
-            for st in attempts:
-                if st.get("status") == "SKIPPED":
-                    continue
-                st_id = st.get("stageId", -1)
-                if (
-                    st_id not in latest
-                    or st.get("attemptId", 0)
-                    > latest[st_id].get("attemptId", 0)
-                ):
-                    latest[st_id] = st
-            for st in latest.values():
-                agg["n_stages"] += 1
-                agg["task_time_ms"] += st.get("executorRunTime", 0)
-                agg["input_mb"] += st.get("inputBytes", 0) / 1e6
-                agg["shuffle_read_mb"] += st.get("shuffleReadBytes", 0) / 1e6
-                agg["shuffle_write_mb"] += st.get("shuffleWriteBytes", 0) / 1e6
-                agg["spill_mb"] += st.get("diskBytesSpilled", 0) / 1e6
-                agg["n_tasks"] += st.get("numCompleteTasks", 0)
-        for k in ("input_mb", "shuffle_read_mb", "shuffle_write_mb", "spill_mb"):
-            agg[k] = round(agg[k], 2)
-        out[name] = agg
+            ran = [st for st in attempts if st.get("status") != "SKIPPED"]
+            if ran:
+                rows.append(
+                    _stage_row(max(ran, key=lambda st: st.get("attemptId", 0)))
+                )
+        rows.sort(key=lambda r: -r["task_time_ms"])
+        out[name] = {
+            "wall_s": round(wall, 3),
+            "n_jobs": len(jobs),
+            "n_stages": len(rows),
+            **{
+                k: round(sum(r[k] for r in rows), 2)
+                for k in ("task_time_ms", "n_tasks", *_MB_FIELDS)
+            },
+            "err": err,
+            "stages": rows,
+        }
     return out
 
 
 def main() -> None:
     args = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.1"
-    # ADVICE r15: same disambiguation as capture_plans — a directory in
-    # the cwd named like a query must not consume the query argument
-    if args and args[0] not in QUERIES and os.path.isdir(args[0]):
-        sf_dir, args = args[0], args[1:]
+    # an explicit flag, so a path and a query name can never be mistaken
+    # for each other
+    if args[:1] == ["--sf-dir"]:
+        if len(args) < 2:
+            sys.exit(__doc__)
+        sf_dir, args = args[1], args[2:]
+    unknown = set(args) - set(QUERIES)
+    if unknown:
+        sys.exit(f"unknown queries: {sorted(unknown)}")
     names = args or list(QUERIES)
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
@@ -137,7 +151,19 @@ def main() -> None:
             f"{a['shuffle_write_mb']:>7.1f} {a['spill_mb']:>6.1f}"
             + (f"  ERR {a['err']}" if a["err"] else "")
         )
-
+    for n, a in res.items():
+        print(f"\n{n}: slowest stages")
+        print(
+            f"{'sid':>4} {'task_s':>7} {'tasks':>5} {'in_mb':>7} {'shr_mb':>7} "
+            f"{'shw_mb':>7}  name"
+        )
+        for st in a["stages"][:5]:
+            print(
+                f"{st['stage_id']:>4} {st['task_time_ms'] / 1000:>7.2f} "
+                f"{st['n_tasks']:>5} {st['input_mb']:>7.1f} "
+                f"{st['shuffle_read_mb']:>7.1f} {st['shuffle_write_mb']:>7.1f}"
+                f"  {st['name']}"
+            )
 
 if __name__ == "__main__":
     main()

@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from insect_observation_data_pipeline_spark import get_spark  # noqa: E402
-from insect_observation_data_pipeline_spark.plans import (  # noqa: E402
+from insect_observation_data_pipeline_spark.plans.inspect import (  # noqa: E402
     shuffle_write_stages,
 )
 from insect_observation_data_pipeline_spark.queries import QUERIES  # noqa: E402
