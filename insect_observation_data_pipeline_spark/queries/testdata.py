@@ -1211,8 +1211,12 @@ def e7_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     active = e.select(
         "user_id", F.date_trunc("week", F.col("ts")).cast("date").alias("w")
     ).distinct()
+    # the "merge" hint pins the join strategy: left to AQE, the join was
+    # converted to a broadcast at run time with the build side (and so
+    # the final plan's exchange count) varying between runs; a sort-
+    # merge join keeps both sides hash-partitioned on user_id
     return (
-        active.join(firsts, "user_id")
+        active.join(firsts.hint("merge"), "user_id")
         .groupBy(
             "cohort_week",
             (F.datediff(F.col("w"), F.col("cohort_week")) / 7)

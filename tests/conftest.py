@@ -11,6 +11,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from insect_observation_data_pipeline_spark import get_spark
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "etl_replay: full ETL1+ETL2 DuckDB replay parity (slow); runs by "
+        "default, deselect with -m 'not etl_replay'",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     import os

@@ -3,6 +3,8 @@ test plan): invariants from the reference's constraints + quirks."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -394,38 +396,100 @@ def test_surrogate_keys_unique_and_no_global_window(
             assert unpartitioned_windows(df) == 0, (layer, name)
 
 
+@contextmanager
+def _job_group(sc, group: str):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def _job_id_mark(sc, group: str) -> int:
+    """Run one tiny job under ``group`` and return its job id: job ids
+    are sequential per SparkContext, so two marks bracket every job
+    launched between them."""
+    with _job_group(sc, group):
+        sc.parallelize([0], 1).count()
+    (job_id,) = sc.statusTracker().getJobIdsForGroup(group)
+    return job_id
+
+
 def test_runner_materializes_layers_and_is_idempotent(
     spark, pipeline, fixtures_dir, tmp_path
 ):
     """EP1+EP2 runner: silver/quarantine/gold materialized as parquet at
     layer boundaries, gold built FROM DISK (the FDW-boundary analog),
-    results equal to the in-memory composition, and a full re-run is
-    idempotent (dims and facts are recompute+overwrite)."""
+    every table read back from disk hash-equal to the DuckDB-checked
+    in-memory composition (``pipeline``), and a full re-run is
+    idempotent (dims and facts are recompute+overwrite). The re-run
+    runs under a caller's job group: every job it launches, the
+    concurrent writers' included, must belong to that group."""
+    import os
+
     from insect_observation_data_pipeline_spark.etl.runner import run_pipeline
+    from tools.compare import table_hash
+
+    def hashes(df):
+        return table_hash([tuple(r) for r in df.collect()], df.columns)
+
+    want = {
+        (layer, name): hashes(df)
+        for layer in ("silver", "quarantine", "gold")
+        for name, df in pipeline[layer].items()
+    }
+
+    def on_disk(dirs):
+        return {
+            (layer, entry.removesuffix(".parquet")): hashes(
+                spark.read.parquet(os.path.join(dirs[layer], entry))
+            )
+            for layer in ("silver", "quarantine", "gold")
+            for entry in sorted(os.listdir(dirs[layer]))
+        }
 
     wh = str(tmp_path / "warehouse")
     dirs = run_pipeline(spark, str(fixtures_dir), wh)
-    import os
-
-    assert os.path.exists(os.path.join(dirs["silver"], "observations.parquet"))
-    assert os.path.exists(
-        os.path.join(dirs["quarantine"], "invalid_observations.parquet")
-    )
-    fact = spark.read.parquet(
-        os.path.join(dirs["gold"], "fact_pollination_activity.parquet")
-    )
-    expected = pipeline["gold"]["fact_pollination_activity"]
-    assert fact.count() == expected.count()
-    got_total = fact.agg(F.sum("observation_count").alias("n")).collect()[0]["n"]
-    want_total = expected.agg(F.sum("observation_count").alias("n")).collect()[0]["n"]
-    assert got_total == want_total
+    assert on_disk(dirs) == want
 
     # re-run: full recompute + overwrite => identical state
-    run_pipeline(spark, str(fixtures_dir), wh)
-    fact2 = spark.read.parquet(
-        os.path.join(dirs["gold"], "fact_pollination_activity.parquet")
-    )
-    assert fact2.count() == expected.count()
+    sc = spark.sparkContext
+    first = _job_id_mark(sc, "runner-before")
+    with _job_group(sc, "g"):
+        run_pipeline(spark, str(fixtures_dir), wh)
+    last = _job_id_mark(sc, "runner-after")
+    launched = set(range(first + 1, last))
+    assert launched, "the re-run launched no job"
+    assert launched <= set(sc.statusTracker().getJobIdsForGroup("g"))
+    assert on_disk(dirs) == want
+
+
+def test_write_layers_raises_failed_write_and_joins_writers(spark, tmp_path):
+    """A table whose write fails at execution time (a raising Python
+    UDF) fails the whole ``_write_layers`` call with that error, and no
+    writer thread outlives the call."""
+    import threading
+
+    from pyspark.errors import PythonException
+
+    from insect_observation_data_pipeline_spark.etl.runner import _write_layers
+
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("write-wave-boom")
+
+    ok = spark.range(3)
+    before = threading.active_count()
+    with pytest.raises(PythonException, match="write-wave-boom"):
+        _write_layers(
+            {
+                str(tmp_path / "a"): {"ok1": ok, "bad": ok.select(boom("id"))},
+                str(tmp_path / "b"): {"ok2": ok},
+            }
+        )
+    assert threading.active_count() == before
 
 
 def _assert_duckdb_parity(pipeline, fixtures_dir):
@@ -674,12 +738,14 @@ def _assert_duckdb_parity(pipeline, fixtures_dir):
     assert not failures, "\n".join(failures)
 
 
+@pytest.mark.etl_replay
 def test_duckdb_end_to_end_parity(pipeline, fixtures_dir):
     """VERDICT r1 #5: cross-engine replay on the reference-shaped
     fixtures."""
     _assert_duckdb_parity(pipeline, fixtures_dir)
 
 
+@pytest.mark.etl_replay
 def test_duckdb_end_to_end_parity_id_grain_edges(
     edge_pipeline, edge_fixtures_dir
 ):
@@ -928,12 +994,12 @@ def test_write_layer_clears_stale_tables(spark, tmp_path):
     """Round-13 review: overwrite is per-table, so a table dropped or
     renamed between runs survived on disk and _read_layer fed the stale
     frame downstream — the layer directory is cleared per rebuild."""
-    from insect_observation_data_pipeline_spark.etl.runner import _read_layer, _write_layer
+    from insect_observation_data_pipeline_spark.etl.runner import _read_layer, _write_layers
 
     d = str(tmp_path / "silver")
     df = spark.createDataFrame([(1,)], "a int")
-    _write_layer({"old_name": df}, d)
-    _write_layer({"new_name": df}, d)
+    _write_layers({d: {"old_name": df}})
+    _write_layers({d: {"new_name": df}})
     assert set(_read_layer(spark, d)) == {"new_name"}
 
 
@@ -1028,6 +1094,7 @@ def geo_pipeline(spark, geo_fixtures_dir):
     return _build_pipeline(spark, geo_fixtures_dir)
 
 
+@pytest.mark.etl_replay
 def test_duckdb_end_to_end_parity_geography_edges(
     geo_pipeline, geo_fixtures_dir
 ):
