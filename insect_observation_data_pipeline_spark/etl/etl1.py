@@ -21,6 +21,16 @@ duplicates are legal (re-ingest doubles them by design, README.md:19);
 missing month -> January-1 placeholder; observations predating a user's
 first affiliation attach to the earliest one.
 
+Materialization: ``load_institutions``, ``load_users`` and part 3's
+staging half, ``stage_observations``, take a keyword-only
+``materialize`` callable and apply it to every frame that two or more
+later frames read (the geography chain, institutions, the cleaned
+staging rows, ``users``, the observation lookups). The default is the
+identity, so the functions stay pure and lazy for tests and plan
+inspection; the runner passes an eager ``localCheckpoint`` so each
+shared intermediate is computed once, where it is built, instead of
+once per reading frame.
+
 Scale notes: lookups/dims are tiny (broadcast); the only big-data paths
 are the staging scan, the quarantine split (one pass), and the
 observation->user attribution join (small build side, broadcast). The
@@ -30,6 +40,7 @@ users — bounded work per staging row.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
@@ -50,7 +61,10 @@ from insect_observation_data_pipeline_spark.operators import (
     scd2_end_date,
     split_valid_invalid,
 )
-from insect_observation_data_pipeline_spark.sources.seed import SUBSCRIPTION_TYPES
+from insect_observation_data_pipeline_spark.sources.seed import (
+    SUBSCRIPTION_TYPES,
+    pollination_qualities,
+)
 
 # raw CSV layouts (FIXTURES.md §1-3; staging DDL 02_ETL1_part1.sql:7-12,
 # 03_ETL1_part2.sql:6-18, 04_ETL1_part3.sql:9-40)
@@ -94,10 +108,27 @@ def _sk(df: DataFrame, name: str, business_cols: list[str]) -> DataFrame:
     return with_hash_sk(df, name, business_cols)
 
 
+#: pins a shared intermediate frame (see the module docstring)
+Materialize = Callable[[DataFrame], DataFrame]
+
+
+def _lazy(df: DataFrame) -> DataFrame:
+    return df
+
+
 @dataclass
 class Etl1Result:
     silver: dict[str, DataFrame] = field(default_factory=dict)
     quarantine: dict[str, DataFrame] = field(default_factory=dict)
+
+
+@dataclass
+class StagedObservations(Etl1Result):
+    """Part 3's staging half: the lookups (silver) and the observation
+    quarantine, plus the repaired rule-passing rows the attribution half
+    reads."""
+
+    valid: DataFrame | None = None
 
 
 # ---------------------------------------------------------------------------
@@ -105,7 +136,9 @@ class Etl1Result:
 # ---------------------------------------------------------------------------
 
 
-def load_institutions(staging: DataFrame) -> Etl1Result:
+def load_institutions(
+    staging: DataFrame, *, materialize: Materialize = _lazy
+) -> Etl1Result:
     """Staging (institution, city, county, country) -> geography chain +
     institutions. Reference: 02_ETL1_part1.sql:30-79."""
     rules = [
@@ -122,14 +155,14 @@ def load_institutions(staging: DataFrame) -> Etl1Result:
         F.trim("country").alias("country_name"),
     )
 
-    countries = _sk(
+    countries = materialize(_sk(
         valid.filter(F.col("country_name").isNotNull())
         .select("country_name")
         .distinct(),
         "country_id",
         ["country_name"],
-    )
-    counties = _sk(
+    ))
+    counties = materialize(_sk(
         valid.filter(F.col("county_name").isNotNull())
         .select("county_name", "country_name")
         .distinct(),
@@ -137,7 +170,7 @@ def load_institutions(staging: DataFrame) -> Etl1Result:
         ["county_name", "country_name"],
     ).join(F.broadcast(countries), "country_name").select(
         "county_id", "county_name", "country_id"
-    )
+    ))
     # cities INNER-join counties BY NAME (02_ETL1_part1.sql:57-64,
     # round-15 parity): a staging city whose county is NULL (or names no
     # county) never lands — the old left join kept (city, NULL county)
@@ -146,7 +179,7 @@ def load_institutions(staging: DataFrame) -> Etl1Result:
     # under two countries yields one city row per county row. The
     # surrogate therefore hashes the joined county_id, not the raw
     # county string.
-    cities = _sk(
+    cities = materialize(_sk(
         valid.filter(F.col("city_name").isNotNull())
         .select("city_name", "county_name")
         .distinct()
@@ -157,7 +190,7 @@ def load_institutions(staging: DataFrame) -> Etl1Result:
         .select("city_name", "county_id"),
         "city_id",
         ["city_name", "county_id"],
-    ).select("city_id", "city_name", "county_id")
+    ).select("city_id", "city_name", "county_id"))
 
     # institutions dedup AFTER the city join, on (name, city_id) — the
     # reference's SELECT DISTINCT stg.institution, cit.city_id FROM stg
@@ -191,7 +224,7 @@ def load_institutions(staging: DataFrame) -> Etl1Result:
         "institution_name",
         F.lit(None).cast("long").alias("city_id"),
     )
-    institutions = institutions.unionByName(unaff)
+    institutions = materialize(institutions.unionByName(unaff))
 
     return Etl1Result(
         silver={
@@ -209,7 +242,12 @@ def load_institutions(staging: DataFrame) -> Etl1Result:
 # ---------------------------------------------------------------------------
 
 
-def load_users(staging: DataFrame, geography: dict[str, DataFrame]) -> Etl1Result:
+def load_users(
+    staging: DataFrame,
+    geography: dict[str, DataFrame],
+    *,
+    materialize: Materialize = _lazy,
+) -> Etl1Result:
     """Staging users -> users (now with city_id), user_institution (SCD2),
     user_subscription (SCD2), PLUS the users-batch geography additions.
     Reference: 03_ETL1_part2.sql:54-246.
@@ -269,7 +307,7 @@ def load_users(staging: DataFrame, geography: dict[str, DataFrame]) -> Etl1Resul
         F.trim("country") if "country" in staging.columns
         else F.lit("United Kingdom")
     )
-    valid = valid.select(
+    valid = materialize(valid.select(
         F.trim("full_name").alias("full_name"),
         F.trim("username").alias("username"),
         F.trim("email").alias("email"),
@@ -281,7 +319,7 @@ def load_users(staging: DataFrame, geography: dict[str, DataFrame]) -> Etl1Resul
         F.trim("subscription_type").alias("subscription_type_name"),
         F.try_to_date("subscription_start", "yyyy-MM-dd").alias("subscription_start"),
         F.try_to_date("join_date", "yyyy-MM-dd").alias("join_date"),
-    )
+    ))
 
     # users-batch geography: insert-if-absent by bare NAME against the
     # institutions-batch tables (03_ETL1_part2.sql:76-107, round-15
@@ -296,7 +334,7 @@ def load_users(staging: DataFrame, geography: dict[str, DataFrame]) -> Etl1Resul
         "country_id",
         ["country_name"],
     )
-    countries_full = countries.unionByName(new_countries)
+    countries_full = materialize(countries.unionByName(new_countries))
     new_counties = _sk(
         valid.filter(F.col("county_name").isNotNull())
         .select("county_name", "country_name")
@@ -307,7 +345,7 @@ def load_users(staging: DataFrame, geography: dict[str, DataFrame]) -> Etl1Resul
     ).join(F.broadcast(countries_full), "country_name").select(
         "county_id", "county_name", "country_id"
     )
-    counties_full = counties.unionByName(new_counties)
+    counties_full = materialize(counties.unionByName(new_counties))
     new_cities = _sk(
         valid.filter(F.col("city_name").isNotNull())
         .select("city_name", "county_name")
@@ -322,12 +360,12 @@ def load_users(staging: DataFrame, geography: dict[str, DataFrame]) -> Etl1Resul
         "city_id",
         ["city_name", "county_id"],
     ).select("city_id", "city_name", "county_id")
-    cities_full = cities.unionByName(new_cities)
+    cities_full = materialize(cities.unionByName(new_cities))
 
     # city lookup with its business identity chain (county, country) —
     # the deterministic-ordering legs wherever a bare city NAME is
     # ambiguous across counties
-    city_lkp = (
+    city_lkp = materialize(
         cities_full.join(
             F.broadcast(
                 counties_full.select(
@@ -365,7 +403,7 @@ def load_users(staging: DataFrame, geography: dict[str, DataFrame]) -> Etl1Resul
             F.col("city_country_name").asc_nulls_last(),
         ],
     )
-    users = _sk(
+    users = materialize(_sk(
         first.select(
             "username",
             parse_first_name(F.col("full_name")).alias("first_name"),
@@ -376,7 +414,7 @@ def load_users(staging: DataFrame, geography: dict[str, DataFrame]) -> Etl1Resul
         ),
         "user_id",
         ["username"],
-    )
+    ))
 
     # SCD2: one interval per (user, institution, start); end-date = next
     # start - 1 day via lead() (03_ETL1_part2.sql:137-188). Round-12
@@ -640,22 +678,34 @@ def load_observations(
     users: DataFrame,
     user_institution: DataFrame,
 ) -> Etl1Result:
-    """Staging observations -> lookups + append-only observations.
+    """Staging observations -> lookups + append-only observations: the
+    staging half composed with the attribution half.
 
     Reference: 04_ETL1_part3.sql:117-454. ``staging`` must carry a
     ``raw_data_id`` column (the driver adds one at ingest).
     """
+    return attribute_observations(
+        stage_observations(staging), users, user_institution
+    )
+
+
+def stage_observations(
+    staging: DataFrame, *, materialize: Materialize = _lazy
+) -> StagedObservations:
+    """Part 3's staging half: quarantine split, repairs and the lookups
+    (04_ETL1_part3.sql:117-369). Reads only ``staging``, so it can run
+    before the users exist."""
     kept = staging.select("raw_data_id", *[normalize_na(F.col(c)).alias(c) for c in OBS_KEPT])
     valid, invalid = split_valid_invalid(kept, observation_rules())
-    valid = _repair_codes(
+    valid = materialize(_repair_codes(
         valid.withColumn("pollinator_species", species_case(F.col("pollinator_species")))
         .withColumn("plant_species", species_case(F.col("plant_species")))
         .withColumn("habitat", F.initcap("habitat"))
         .withColumn("caste", F.trim("caste"))
-    )
+    ))
 
     # lookups, insert-if-absent -> recompute distinct + dense sk
-    pollinators = _sk(
+    pollinators = materialize(_sk(
         distinct_on(
             valid.select(
                 F.col("pollinator_species").alias("species_name"),
@@ -666,8 +716,8 @@ def load_observations(
         ),
         "pollinator_id",
         ["species_name"],
-    )
-    plants = _sk(
+    ))
+    plants = materialize(_sk(
         distinct_on(
             valid.select(
                 F.col("plant_species").alias("species_name"),
@@ -678,22 +728,22 @@ def load_observations(
         ),
         "plant_id",
         ["species_name"],
-    )
-    castes = _sk(
+    ))
+    castes = materialize(_sk(
         valid.filter(F.col("caste").isNotNull())
         .select(F.col("caste").alias("caste_name"))
         .distinct(),
         "caste_id",
         ["caste_name"],
-    )
-    habitats = _sk(
+    ))
+    habitats = materialize(_sk(
         valid.filter(F.col("habitat").isNotNull())
         .select(F.col("habitat").alias("habitat_name"))
         .distinct(),
         "habitat_id",
         ["habitat_name"],
-    )
-    locations = _sk(
+    ))
+    locations = materialize(_sk(
         valid.filter(F.col("latitude").isNotNull() & F.col("longitude").isNotNull())
         .select(
             F.col("latitude").cast("decimal(9,6)").alias("latitude"),
@@ -702,7 +752,36 @@ def load_observations(
         .distinct(),
         "location_id",
         ["latitude", "longitude"],
+    ))
+
+    return StagedObservations(
+        silver={
+            "pollination_qualities": pollination_qualities(staging.sparkSession),
+            "pollinator_species": pollinators,
+            "plant_species": plants,
+            "castes": castes,
+            "habitats": habitats,
+            "locations": locations,
+        },
+        quarantine={"invalid_observations": invalid},
+        valid=valid,
     )
+
+
+def attribute_observations(
+    staged: StagedObservations,
+    users: DataFrame,
+    user_institution: DataFrame,
+) -> Etl1Result:
+    """Part 3's attribution half: author -> user join, affiliation
+    priority pick and the lookup FK joins (04_ETL1_part3.sql:370-454).
+    Returns the staging half's tables plus ``observations``."""
+    valid = staged.valid
+    pollinators = staged.silver["pollinator_species"]
+    plants = staged.silver["plant_species"]
+    castes = staged.silver["castes"]
+    habitats = staged.silver["habitats"]
+    locations = staged.silver["locations"]
 
     # observation date with January placeholder (04_ETL1_part3.sql:370-388)
     dated = valid.withColumn(
@@ -860,17 +939,7 @@ def load_observations(
         )
     )
 
-    from insect_observation_data_pipeline_spark.sources.seed import pollination_qualities
-
     return Etl1Result(
-        silver={
-            "pollination_qualities": pollination_qualities(staging.sparkSession),
-            "pollinator_species": pollinators,
-            "plant_species": plants,
-            "castes": castes,
-            "habitats": habitats,
-            "locations": locations,
-            "observations": observations,
-        },
-        quarantine={"invalid_observations": invalid},
+        silver={**staged.silver, "observations": observations},
+        quarantine=staged.quarantine,
     )

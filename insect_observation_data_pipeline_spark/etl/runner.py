@@ -3,20 +3,23 @@
 The transform layer is pure ``DataFrame -> DataFrame`` functions
 (etl1/etl2); this runner adds the MATERIALIZATION policy from SURVEY §3:
 
-- ETL1 is cut where the reference cuts it. The reference runs part 1
-  (institutions), part 2 (users + SCD2) and part 3 (observations) in
-  order, each reading the tables the previous part wrote. Here each
-  part's frames that a later part reads are ``localCheckpoint``-ed
-  eagerly at that boundary: the part-1 silver frames (geography +
-  institutions) after ``load_institutions``, ``users`` and
-  ``user_institution`` after ``load_users``. Every later frame starts
-  from computed rows instead of re-running the geography, users and
-  SCD2 lineage once per table that reads them. The other staging steps
-  stay lazy.
+- ETL1 runs as its dependency graph. Every frame that two or more
+  later frames read is pinned WHERE IT IS BUILT: the runner passes
+  ``materialize=`` an eager ``localCheckpoint`` to the etl1 transforms
+  (the geography chain, institutions, the cleaned users staging,
+  ``users``, the repaired observations and their lookups), so each
+  shared intermediate is computed once instead of once per frame that
+  reads it. Part 3's staging half (quarantine split, repairs, lookups)
+  reads only the observations CSV, so it runs on a pool thread beside
+  part 1 (institutions) -> part 2 (users + SCD2), and its attribution
+  half joins the two branches once part 2 is done.
 - Each layer is written in ONE concurrent wave: ``_write_layers``
   clears the layer directories and submits every table write at once
-  from a thread pool sized to the session's default parallelism, so
-  small tables' jobs fill the cores a lone write leaves idle.
+  to a thread pool sized to the session's default parallelism, so
+  small tables' jobs fill the cores a lone write leaves idle. The
+  observation branch and the write wave share one pool idiom,
+  ``_thread_pool``: jobs keep the caller's job group, and no thread
+  outlives the call.
 - Parquet lands exactly at the reference's layer boundaries (silver =
   OLTP-equivalent, gold = OLAP-equivalent, quarantine alongside
   silver). Gold is built from the silver files ON DISK, not the
@@ -37,7 +40,9 @@ from __future__ import annotations
 
 import os
 import shutil
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Callable, Iterator
+from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +50,42 @@ from pyspark.util import inheritable_thread_target
 
 from insect_observation_data_pipeline_spark.etl import etl1, etl2
 from insect_observation_data_pipeline_spark.sources.csv import read_csv_staging
+
+
+@contextmanager
+def _thread_pool(
+    spark: SparkSession, workers: int
+) -> Iterator[Callable[..., Future]]:
+    """Yield ``submit(fn, *args)``, which runs ``fn`` on a pool thread
+    and returns its future. On leaving the block every future's
+    ``result()`` is read in submission order, so the first failed call
+    raises its own error once every started call has ended.
+
+    If the block itself raises, that error leaves only after every
+    started call has ended too (a running call is not cancelled), and a
+    failure of those calls is dropped: in ``run_etl1``, a bad
+    institutions or users CSV is reported once the observation branch
+    has finished its pass."""
+    pool = ThreadPoolExecutor(workers)
+    futures: list[Future] = []
+
+    def submit(fn: Callable, *args) -> Future:
+        # wrapped HERE, in the caller's thread: the pool thread runs its
+        # jobs under the caller's local properties (job group,
+        # description, scheduler pool) and session tags, captured at
+        # wrap time
+        futures.append(pool.submit(inheritable_thread_target(spark)(fn), *args))
+        return futures[-1]
+
+    try:
+        yield submit
+        for f in futures:
+            f.result()
+    finally:
+        # on a failure, calls not yet started are dropped; the running
+        # ones finish before the error leaves, so no pool thread
+        # outlives the block
+        pool.shutdown(wait=True, cancel_futures=True)
 
 
 def _write_layers(layers: dict[str, dict[str, DataFrame]]) -> None:
@@ -65,24 +106,10 @@ def _write_layers(layers: dict[str, dict[str, DataFrame]]) -> None:
         for name, df in tables.items()
     ]
     spark = writes[0][0].sparkSession
-    # wrapped HERE, in the caller's thread: the writer threads run their
-    # jobs under the caller's local properties (job group, description,
-    # scheduler pool) and session tags, captured at wrap time
-    write = inheritable_thread_target(spark)(
-        lambda df, path: df.write.mode("overwrite").parquet(path)
-    )
-    pool = ThreadPoolExecutor(
-        min(len(writes), spark.sparkContext.defaultParallelism)
-    )
-    try:
-        futures = [pool.submit(write, df, path) for df, path in writes]
-        for f in futures:
-            f.result()
-    finally:
-        # on a failure, writes not yet started are dropped; the running
-        # ones finish before the error leaves, so no writer thread
-        # outlives the call
-        pool.shutdown(wait=True, cancel_futures=True)
+    workers = min(len(writes), spark.sparkContext.defaultParallelism)
+    with _thread_pool(spark, workers) as submit:
+        for df, path in writes:
+            submit(df.write.mode("overwrite").parquet, path)
 
 
 def _read_layer(spark: SparkSession, layer_dir: str) -> dict[str, DataFrame]:
@@ -114,51 +141,59 @@ def run_etl1(spark: SparkSession, raw_dir: str, warehouse: str) -> str:
         # country column must exist
         defaults={"country": "United Kingdom"},
     )
-    # MATERIALIZE the id-stamped staging frame (round-12 review +
-    # follow-up): the observations silver and the observation quarantine
-    # are separate write actions over it (concurrent, in one wave), so
-    # without this the CSV scan + rule split re-ran once per reading
-    # write (a full input scan each at the 100 TB posture), and — worse
-    # — raw_data_id was re-ASSIGNED per action:
-    # monotonically_increasing_id is deterministic only per (partition,
-    # row-position), so any scan drift between the observations write
-    # and the quarantine write silently breaks their id linkage.
-    # localCheckpoint(eager), not persist: a persist-only pin is soft —
-    # cached partitions lost to executor failure RECOMPUTE from the CSV
-    # lineage and re-assign ids mid-run. The checkpoint cuts lineage,
-    # so a lost block fails the run LOUDLY instead (a production
-    # incremental pipeline stages the id-stamped frame to the
-    # warehouse and re-reads it — the same barrier, restartable). The
-    # reference's SERIAL is likewise run-scoped.
-    obs_stg = (
-        read_csv_staging(
-            spark,
-            os.path.join(raw_dir, "observations.csv"),
-            etl1.OBSERVATIONS_COLS,
-            encoding="ISO-8859-1",
-        )
-        .withColumn("raw_data_id", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
-    )
 
-    # the reference's PART BOUNDARIES (SURVEY §3: part 1 before part 2
-    # before part 3, each reading the tables the previous one wrote),
-    # checkpointed eagerly for the same reason as obs_stg: part 1's
-    # geography + institutions feed part 2 and the part-2 geography,
-    # users and user_institution feed part 3 and several silver tables,
-    # so as lazy lineage every reading write re-ran them (6-25 jobs per
-    # dimension table on a cold 2000-row rebuild). Surrogate keys are
-    # deterministic hashes, so the cut changes no value.
-    r1 = etl1.load_institutions(inst_stg)
-    r1.silver = {k: df.localCheckpoint(eager=True) for k, df in r1.silver.items()}
-    # r2's silver carries the UPDATED countries/counties/cities (users-
-    # batch insert-if-absent additions) — the merge below replaces r1's
-    r2 = etl1.load_users(users_stg, r1.silver)
-    for k in ("users", "user_institution"):
-        r2.silver[k] = r2.silver[k].localCheckpoint(eager=True)
-    r3 = etl1.load_observations(
-        obs_stg, r2.silver["users"], r2.silver["user_institution"]
-    )
+    # every shared intermediate is pinned where the transform builds it
+    # (eagerly, for the same reason as obs_stg below): as lazy lineage
+    # each frame reading it re-ran it — counties re-ran countries,
+    # user_institution and user_subscription re-ran users, and each
+    # lookup ran once for its own write and again for the observations
+    # join. Surrogate keys are deterministic hashes, so a cut changes
+    # no value.
+    def pin(df: DataFrame) -> DataFrame:
+        return df.localCheckpoint(eager=True)
+
+    def stage_observations() -> etl1.StagedObservations:
+        # MATERIALIZE the id-stamped staging frame (round-12 review +
+        # follow-up): the observations silver and the observation
+        # quarantine are separate write actions over it (concurrent, in
+        # one wave), so without this the CSV scan + rule split re-ran
+        # once per reading write (a full input scan each at the 100 TB
+        # posture), and — worse — raw_data_id was re-ASSIGNED per
+        # action: monotonically_increasing_id is deterministic only per
+        # (partition, row-position), so any scan drift between the
+        # observations write and the quarantine write silently breaks
+        # their id linkage. localCheckpoint(eager), not persist: a
+        # persist-only pin is soft — cached partitions lost to executor
+        # failure RECOMPUTE from the CSV lineage and re-assign ids
+        # mid-run. The checkpoint cuts lineage, so a lost block fails
+        # the run LOUDLY instead (a production incremental pipeline
+        # stages the id-stamped frame to the warehouse and re-reads it —
+        # the same barrier, restartable). The reference's SERIAL is
+        # likewise run-scoped.
+        obs_stg = pin(
+            read_csv_staging(
+                spark,
+                os.path.join(raw_dir, "observations.csv"),
+                etl1.OBSERVATIONS_COLS,
+                encoding="ISO-8859-1",
+            ).withColumn("raw_data_id", F.monotonically_increasing_id())
+        )
+        return etl1.stage_observations(obs_stg, materialize=pin)
+
+    # the reference runs part 1 before part 2 before part 3 (SURVEY
+    # §3), but only the attribution half of part 3 reads the users:
+    # the observation staging half runs on a pool thread while part 1
+    # and part 2 run here, and the two branches meet at attribution
+    with _thread_pool(spark, 1) as submit:
+        staged = submit(stage_observations)
+        r1 = etl1.load_institutions(inst_stg, materialize=pin)
+        # r2's silver carries the UPDATED countries/counties/cities
+        # (users-batch insert-if-absent additions) — the merge below
+        # replaces r1's
+        r2 = etl1.load_users(users_stg, r1.silver, materialize=pin)
+        r3 = etl1.attribute_observations(
+            staged.result(), r2.silver["users"], r2.silver["user_institution"]
+        )
     silver = {**r1.silver, **r2.silver, **r3.silver}
     quarantine = {**r1.quarantine, **r2.quarantine, **r3.quarantine}
 

@@ -407,6 +407,12 @@ def _job_group(sc, group: str):
             sc.setLocalProperty(key, None)
 
 
+#: job-count bounds of one runner re-run on the ``fixtures_dir`` CSVs:
+#: 83 and 62 jobs in each of 9 runs (4 cores), plus a small margin
+ETL1_MAX_JOBS = 88
+ETL2_MAX_JOBS = 66
+
+
 def _job_id_mark(sc, group: str) -> int:
     """Run one tiny job under ``group`` and return its job id: job ids
     are sequential per SparkContext, so two marks bracket every job
@@ -426,10 +432,18 @@ def test_runner_materializes_layers_and_is_idempotent(
     in-memory composition (``pipeline``), and a full re-run is
     idempotent (dims and facts are recompute+overwrite). The re-run
     runs under a caller's job group: every job it launches, the
-    concurrent writers' included, must belong to that group."""
+    observation branch's and the concurrent writers' included, must
+    belong to that group. Its ETL1 and ETL2 job counts stay under
+    bounds: a shared frame that stops being computed once (an unpinned
+    dimension re-run by every frame reading it) adds jobs on any
+    host."""
     import os
 
-    from insect_observation_data_pipeline_spark.etl.runner import run_pipeline
+    from insect_observation_data_pipeline_spark.etl.runner import (
+        run_etl1,
+        run_etl2,
+        run_pipeline,
+    )
     from tools.compare import table_hash
 
     def hashes(df):
@@ -458,12 +472,47 @@ def test_runner_materializes_layers_and_is_idempotent(
     sc = spark.sparkContext
     first = _job_id_mark(sc, "runner-before")
     with _job_group(sc, "g"):
-        run_pipeline(spark, str(fixtures_dir), wh)
+        run_etl1(spark, str(fixtures_dir), wh)
+    mid = _job_id_mark(sc, "runner-etl1")
+    with _job_group(sc, "g"):
+        run_etl2(spark, wh)
     last = _job_id_mark(sc, "runner-after")
-    launched = set(range(first + 1, last))
-    assert launched, "the re-run launched no job"
-    assert launched <= set(sc.statusTracker().getJobIdsForGroup("g"))
+    etl1_jobs, etl2_jobs = set(range(first + 1, mid)), set(range(mid + 1, last))
+    assert etl1_jobs and etl2_jobs, "the re-run launched no job"
+    assert etl1_jobs | etl2_jobs <= set(sc.statusTracker().getJobIdsForGroup("g"))
     assert on_disk(dirs) == want
+    assert len(etl1_jobs) <= ETL1_MAX_JOBS, len(etl1_jobs)
+    assert len(etl2_jobs) <= ETL2_MAX_JOBS, len(etl2_jobs)
+
+
+def test_run_etl1_raises_observation_branch_failure_and_joins_it(
+    spark, fixtures_dir, tmp_path
+):
+    """The observation staging half runs on a pool thread beside
+    institutions -> users: its failure (an observations CSV whose header
+    drifted, which the staging read rejects) fails ``run_etl1`` with
+    that error, and no pool thread outlives the call."""
+    import shutil
+    import threading
+
+    from py4j.protocol import Py4JJavaError
+
+    from insect_observation_data_pipeline_spark.etl.runner import run_etl1
+
+    raw = tmp_path / "raw"
+    shutil.copytree(fixtures_dir, raw)
+    obs = raw / "observations.csv"
+    header, rows = obs.read_text().split("\n", 1)
+    cols = header.split(",")
+    cols[0], cols[1] = cols[1], cols[0]  # authors <-> title
+    obs.write_text(",".join(cols) + "\n" + rows)
+
+    before = threading.active_count()
+    with pytest.raises(
+        Py4JJavaError, match=r"(?s)observations\.csv.*CSV header does not conform"
+    ):
+        run_etl1(spark, str(raw), str(tmp_path / "warehouse"))
+    assert threading.active_count() == before
 
 
 def test_write_layers_raises_failed_write_and_joins_writers(spark, tmp_path):

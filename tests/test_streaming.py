@@ -9,6 +9,19 @@ from insect_observation_data_pipeline_spark.streaming import (
 EVENTS = "/root/testdata/sf0.001/events.parquet"
 
 
+def _await_stream(q, timeout_s: int) -> None:
+    """Wait for an ``availableNow`` query to drain. Fails naming the
+    query if it is still running after ``timeout_s`` (``awaitTermination``
+    itself raises the query's own error if it failed), and stops it
+    either way, so no query outlives its test."""
+    try:
+        assert q.awaitTermination(timeout_s), (
+            f"streaming query {q.name or q.id} still running after {timeout_s} s"
+        )
+    finally:
+        q.stop()
+
+
 def test_stream_matches_batch_backfill(spark, tmp_path):
     """availableNow stream over the events parquet == batch backfill —
     the one-code-path property the window() formulation buys."""
@@ -29,7 +42,7 @@ def test_stream_matches_batch_backfill(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
         for r in spark.sql("SELECT * FROM ev_counts").collect()
@@ -95,7 +108,7 @@ def test_sliding_window_stream_matches_e3_query(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     got = {
         (r["window_start"], r["event_type"]): (r["n"], r["sv"])
         for r in spark.sql(
@@ -145,7 +158,7 @@ def test_stateful_sessionization_stream_matches_batch_query(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     got = {
         r["user_id"]: (r["n_events"], r["n_sessions"])
         for r in spark.sql("SELECT * FROM sess_state").collect()
@@ -220,7 +233,7 @@ def test_dedup_stream_removes_duplicates(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     got = spark.sql("SELECT count(*) AS n FROM dedup_out").collect()[0]["n"]
     assert got == distinct
     # batch path: plain dropDuplicates
@@ -268,7 +281,7 @@ def test_dedup_ingest_sink_grows_clean_corpus(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await_stream(q, 180)
     ids = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
     # exactly one survivor per duplicate group, whichever arrived first
     # (file mtime ties make epoch order environment-dependent)
@@ -303,7 +316,7 @@ def test_keyed_state_sink_matches_batch_upsert(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     got = {
         (r["user_id"], r["event_type"]): r["event_id"]
         for r in spark.read.parquet(state).collect()
@@ -359,7 +372,7 @@ def test_stream_stream_attribution_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     got = {
         (r["purchase_id"], r["signup_ts"])
         for r in spark.sql("SELECT * FROM ss_attr").collect()
@@ -951,7 +964,7 @@ def test_session_window_stream_matches_e5_query(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     got = {
         (r["user_id"], r["session_start"], r["session_end"]): r["n_events"]
         for r in spark.sql("SELECT * FROM sess_native").collect()
@@ -993,7 +1006,7 @@ def test_stateful_funnel_stream_matches_batch_query(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     got = _funnel_rows(spark.sql(
         "SELECT * FROM funnel_state"
     ))
@@ -1091,7 +1104,7 @@ def test_stateful_funnel_state_carries_across_real_microbatches(spark, tmp_path)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
     # update mode appends one snapshot per key per batch: keep the last
     rows = spark.sql("SELECT * FROM funnel_xbatch").collect()
     # user 7 appears in BOTH batches -> two update-mode snapshots; a
@@ -1259,7 +1272,7 @@ def test_segment_scrub_sink_real_microbatches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_stream(q, 120)
 
     got = {
         r["doc_id"]: r["text"]
