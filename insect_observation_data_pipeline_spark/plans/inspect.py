@@ -79,12 +79,15 @@ def _nodes_of(df: DataFrame, *classes: str) -> list:
     return [n for name, n in plan_nodes(physical_plan(df)) if name in classes]
 
 
-def pushed_filters(df: DataFrame) -> list[str]:
+def pushed_filters(df: DataFrame, reading: str | None = None) -> list[str]:
     """All filters pushed into file scans, one whole entry per item
-    (``In(k, [1,2,3])``, ``GreaterThan(v,45.0)``)."""
+    (``In(k, [1,2,3])``, ``GreaterThan(v,45.0)``); with ``reading``,
+    only those of the scans that read that top-level column."""
     return [
         str(f)
         for scan in _nodes_of(df, "FileSourceScanExec")
+        if reading is None
+        or reading in list(scan.requiredSchema().fieldNames())
         for f in _seq(scan.pushedDownFilters())
     ]
 
@@ -121,6 +124,29 @@ def join_key_names(df: DataFrame) -> list[list[str]]:
         for keys in (j.leftKeys(), j.rightKeys()):
             out.append([re.sub(r"#\d+L?", "", str(k)) for k in _seq(keys)])
     return out
+
+
+def aggregate_calls(df: DataFrame) -> list[tuple[str, str, bool]]:
+    """``(mode, function, distinct)`` for every aggregate expression of
+    every aggregate operator: ``("Partial", "max", False)`` is what the
+    plan string prints as ``partial_max(...)``, and a count-distinct is
+    ``(..., "count", True)``."""
+    return [
+        (str(e.mode()), e.aggregateFunction().prettyName(), e.isDistinct())
+        for name, node in plan_nodes(physical_plan(df))
+        if name.endswith("AggregateExec")
+        for e in _seq(node.aggregateExpressions())
+    ]
+
+
+def pandas_group_keys(df: DataFrame) -> list[list[str]]:
+    """Grouping column names of each grouped pandas UDF operator
+    (``applyInPandas``), in plan order — the shuffle key its groups are
+    formed by."""
+    return [
+        [a.name() for a in _seq(n.groupingAttributes())]
+        for n in _nodes_of(df, "FlatMapGroupsInPandasExec")
+    ]
 
 
 # node classes behind each plan_flags key

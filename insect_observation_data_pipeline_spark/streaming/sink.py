@@ -12,9 +12,10 @@ twin of the u1 upsert recompute):
   upsert keyed on arrival would silently regress rows; keeping the
   max-order row per key is idempotent under any delivery order and under
   epoch replays (exactly-once effect from at-least-once delivery).
-- State rewrite goes to a temp dir then swaps into place — on a local
-  filesystem that is one directory rename; on an object store use a
-  transactional table format (Delta/Iceberg) instead, same handler shape.
+- State rewrite goes to a sibling dir then swaps into place
+  (``_swap_dir``) — on a local filesystem that is two directory renames;
+  on an object store use a transactional table format (Delta/Iceberg)
+  instead, same handler shape.
 
 State size = one row per key, read+rewritten per epoch: right for
 dimension-scale keyed views (the use case). For event-scale state use
@@ -26,7 +27,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import re
 import shutil
 
 from pyspark.sql import Column, DataFrame
@@ -35,9 +35,11 @@ from pyspark.sql import functions as F
 from insect_observation_data_pipeline_spark.cache import unpersist_intermediates
 from insect_observation_data_pipeline_spark.operators.dedupe import distinct_on
 
-# bucketed data files carry the writer's bucket id: `..._00003.c000...`;
-# plain (pre-bucketing) files end `...-c000...` with no bucket suffix
-_BUCKET_SUFFIX = re.compile(r"_\d{5}\.c\d{3}")
+# the siblings of a directory swap, in recovery preference order: the
+# complete replacement is written to `<live>.compacting`, and the live
+# copy is parked at `<live>.compacted-old` while the replacement is
+# renamed in (see _swap_dir)
+_SWAP_SIBLINGS = (".compacting", ".compacted-old")
 
 
 def merge_latest(
@@ -214,49 +216,52 @@ def _stage_bucketed_append(
     return files
 
 
-def _has_legacy_files(path: str) -> bool:
-    """True when ``path`` holds plain (non-bucket-suffixed) data files —
-    the pre-bucketing sink layout. Detection reads FILE NAMES, not the
-    session catalog: ``tableExists`` is session-scoped under the
-    default in-memory catalog, so keying the 'one-time' migration on it
-    re-ran a full-index rewrite on every fresh session over an
-    already-bucketed sink (round-6 ADVICE)."""
-    files = _data_files(path)
-    return bool(files) and not all(_BUCKET_SUFFIX.search(f) for f in files)
+def _swap_dir(live: str, write_replacement) -> None:
+    """Replace the directory ``live`` with no instant at which no
+    complete copy is on disk. ``write_replacement(dir)`` writes the full
+    replacement to a sibling dir while the live files keep serving; then
+    ``rename(live -> parked)`` + ``rename(replacement -> live)`` swap it
+    in, and the parked copy is deleted. A crash between the two renames
+    leaves ``live`` missing with both copies on disk, which
+    :func:`_recover_crashed_swap` repairs by one rename. ``live`` need
+    not exist yet (the first write of keyed state)."""
+    new, old = (live + s for s in _SWAP_SIBLINGS)
+    for stale in (new, old):  # crashed earlier attempt
+        if os.path.exists(stale):
+            shutil.rmtree(stale)
+    write_replacement(new)
+    parked = os.path.isdir(live)
+    if parked:
+        os.rename(live, old)
+    os.rename(new, live)
+    if parked:
+        shutil.rmtree(old)
 
 
 def _recover_crashed_swap(path: str) -> bool:
-    """Restore a bucketed dir whose crash window left it missing.
-
-    Both swap idioms in this module (``_migrate_legacy_index``,
-    ``_compact_bucketed_table``) write the full replacement to a
-    sibling temp dir, then ``rename(live -> parked)`` +
-    ``rename(temp -> live)``. A crash BETWEEN the two renames leaves
-    the live dir absent while the COMPLETE replacement still sits in
-    the temp dir (and the original in the parked dir) — so recovery is
-    one rename, never a rebuild. Preference order: the temp dir (the
-    newer, fully-written copy — it was complete before the first
+    """Restore a dir that a crash in :func:`_swap_dir`'s rename window
+    left missing, by one rename, never a rebuild. Preference order: the
+    replacement (the newer copy — it was complete before the first
     rename started), else the parked original. Returns True if a copy
-    was restored. For the dedup sink this is strictly cheaper than its
-    rebuild-from-corpus fallback; for the segment-scrub sink it is the
-    ONLY lossless path — stripped boilerplate cannot be recounted from
-    the scrubbed corpus, so without this a crashed compaction silently
-    forgot every learned segment."""
+    was restored; the other sibling is then deleted.
+
+    For the dedup sink this is strictly cheaper than its
+    rebuild-from-corpus fallback; for the scrub sinks it is the ONLY
+    lossless path — stripped text cannot be recounted from the scrubbed
+    corpus, so without it a crashed compaction silently forgot every
+    learned key; for keyed state either copy converges, since replaying
+    an epoch over state that already holds it changes nothing."""
     if os.path.isdir(path):
         return False
-    restored = False
-    for suffix in (".compacting", ".migrating", ".compacted-old", ".legacy"):
-        cand = path + suffix
-        if not restored and os.path.isdir(cand) and _data_files(cand):
-            os.rename(cand, path)
-            restored = True
-    # drop any remaining stale siblings once a copy is live again
-    if restored:
-        for suffix in (".compacting", ".migrating", ".compacted-old", ".legacy"):
-            cand = path + suffix
-            if os.path.isdir(cand):
-                shutil.rmtree(cand)
-    return restored
+    siblings = [path + s for s in _SWAP_SIBLINGS]
+    complete = [d for d in siblings if _data_files(d)]
+    if not complete:
+        return False
+    os.rename(complete[0], path)
+    for stale in siblings:
+        if os.path.isdir(stale):
+            shutil.rmtree(stale)
+    return True
 
 
 def _register_bucketed_table(
@@ -290,51 +295,6 @@ def _register_bucketed_table(
     )
 
 
-def _migrate_legacy_index(
-    spark,
-    index_path: str,
-    index_table: str,
-    num_buckets: int,
-) -> None:
-    """One-time upgrade of a pre-bucketing dedup-index layout: plain
-    parquet rows at ``index_path`` (no metastore table) are rewritten
-    through the bucketed writer. Bucketed files carry a ``_NNNNN``
-    bucket suffix the bucketed scan requires of EVERY file in the
-    table, so append-over-legacy-files is never an option; a full
-    rewrite of the narrow index is the one-time cost of the upgrade.
-
-    Crash-safe (round-6 ADVICE: the previous version rmtree'd the only
-    durable copy before the rewrite landed): the bucketed rewrite goes
-    to a sibling temp directory while the legacy files stay in place,
-    then the swap is two renames with the legacy copy parked in a
-    trash dir until the new layout is live. At no instant is the index
-    absent from durable storage; a crash in the rename window leaves
-    ``index_path`` missing, which the caller repairs by REBUILDING the
-    index from the corpus (the corpus is the source of truth — the
-    index is always derivable)."""
-    from insect_observation_data_pipeline_spark.sources.parquet import write_bucketed
-
-    tmp_path = index_path + ".migrating"
-    trash_path = index_path + ".legacy"
-    tmp_table = index_table + "__migrating"
-    spark.sql(f"DROP TABLE IF EXISTS `{tmp_table}`")
-    for stale in (tmp_path, trash_path):  # crashed earlier attempt
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
-    write_bucketed(
-        spark.read.parquet(index_path), tmp_table,
-        bucket_by=("fp",), num_buckets=num_buckets,
-        sort_by=("fp",), mode="append", path=tmp_path,
-    )
-    spark.sql(f"DROP TABLE IF EXISTS `{tmp_table}`")  # external: files stay
-    os.rename(index_path, trash_path)
-    os.rename(tmp_path, index_path)
-    shutil.rmtree(trash_path)
-    _register_bucketed_table(
-        spark, index_table, index_path, ("fp",), ("fp",), num_buckets
-    )
-
-
 def _compact_bucketed_table(
     spark,
     path: str,
@@ -349,13 +309,12 @@ def _compact_bucketed_table(
     epochs the index read cost is dominated by per-file overhead
     (footer + buffered chunk reads — measured ~15-25 KB per tiny file
     against ~200 B of logical data), and at cluster scale by namenode /
-    object-store listing. Same crash-safe temp+swap idiom as
-    ``_migrate_legacy_index``: the rewrite lands in a sibling dir while
-    the live files keep serving, then two renames swap it in; a crash
-    in the rename window leaves ``path`` missing, which the next
-    epoch's ``_ensure_index_tables`` repairs by rebuilding from the
-    corpus. The read is explicitly repartitioned on the bucket
-    columns before the write: a plain scan→write carries no
+    object-store listing. The rewrite goes through :func:`_swap_dir`,
+    so the live files keep serving until it is complete, and a crash in
+    the rename window is repaired at the next epoch by
+    :func:`_recover_crashed_swap`. The read is explicitly
+    repartitioned on the bucket columns before the write: a plain
+    scan→write carries no
     bucket-keyed operator, so Spark's auto-bucketed-scan falls back
     to file-split scanning and the write would inherit one task per
     small input file — emitting MORE files than it compacts
@@ -381,25 +340,21 @@ def _compact_bucketed_table(
     instead; the trigger point below is where it slots in."""
     from insect_observation_data_pipeline_spark.sources.parquet import write_bucketed
 
-    tmp_path = path + ".compacting"
-    trash_path = path + ".compacted-old"
     tmp_table = table + "__compacting"
-    spark.sql(f"DROP TABLE IF EXISTS `{tmp_table}`")
-    for stale in (tmp_path, trash_path):  # crashed earlier attempt
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
-    write_bucketed(
-        spark.read.parquet(path).repartition(
-            num_buckets, *[F.col(c) for c in bucket_by]
-        ),
-        tmp_table,
-        bucket_by=bucket_by, num_buckets=num_buckets,
-        sort_by=sort_by, mode="append", path=tmp_path,
-    )
-    spark.sql(f"DROP TABLE IF EXISTS `{tmp_table}`")  # external: files stay
-    os.rename(path, trash_path)
-    os.rename(tmp_path, path)
-    shutil.rmtree(trash_path)
+
+    def write(new_path: str) -> None:
+        spark.sql(f"DROP TABLE IF EXISTS `{tmp_table}`")
+        write_bucketed(
+            spark.read.parquet(path).repartition(
+                num_buckets, *[F.col(c) for c in bucket_by]
+            ),
+            tmp_table,
+            bucket_by=bucket_by, num_buckets=num_buckets,
+            sort_by=sort_by, mode="append", path=new_path,
+        )
+        spark.sql(f"DROP TABLE IF EXISTS `{tmp_table}`")  # external: files stay
+
+    _swap_dir(path, write)
     # the catalog entry still points at `path`; drop the cached file
     # listing so the next scan sees the compacted files
     spark.catalog.refreshTable(table)
@@ -419,11 +374,11 @@ def _ensure_index_tables(
     """Bring the dedup index to 'bucketed files on disk + registered in
     this session's catalog', whatever state disk and catalog are in:
 
-    - index files MISSING (crashed migration swap, manual delete):
-      rebuild both tables from the corpus — the index is derived state,
-      so every crash window is recoverable;
-    - LEGACY plain files: crash-safe bucketed rewrite + band backfill;
-    - bucketed files, catalog entry missing (fresh session): register
+    - either table's files MISSING (a crashed swap with no complete copy
+      left, a first-epoch crash, a manual delete): rebuild both tables
+      from the corpus — the index is derived state, so every crash
+      window is recoverable;
+    - files present, catalog entry missing (fresh session): register
       the existing files as external bucketed tables — metadata only,
       no rewrite.
     """
@@ -433,65 +388,32 @@ def _ensure_index_tables(
     )
     from insect_observation_data_pipeline_spark.sources.parquet import write_bucketed
 
-    # crashed swap (rename window of a migration/compaction): the
-    # complete replacement survives in a sibling dir — one rename beats
-    # the rebuild-from-corpus fallback below
-    _recover_crashed_swap(index_path)
-    _recover_crashed_swap(bands_path)
-    if not _data_files(index_path):
-        for stale in (
-            index_path,
-            index_path + ".migrating",
-            index_path + ".legacy",
-            index_path + ".compacting",
-            index_path + ".compacted-old",
-            bands_path,
-            bands_path + ".compacting",
-            bands_path + ".compacted-old",
-        ):
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
-        for t in (index_table, bands_table):
-            spark.sql(f"DROP TABLE IF EXISTS `{t}`")
-        full = build_dedup_index(
-            spark.read.parquet(corpus_path), text_col=text_col, id_col=id_col
-        ).localCheckpoint(eager=True)
-        write_bucketed(
-            full, index_table,
-            bucket_by=("fp",), num_buckets=num_buckets,
-            sort_by=("fp",), mode="append", path=index_path,
+    fp, band = ("fp",), ("band_idx", "band_hash")
+    if _data_files(index_path) and _data_files(bands_path):
+        _register_bucketed_table(
+            spark, index_table, index_path, fp, fp, num_buckets
         )
-        write_bucketed(
-            build_band_index(full), bands_table,
-            bucket_by=("band_idx", "band_hash"), num_buckets=num_buckets,
-            sort_by=("band_idx", "band_hash"), mode="append", path=bands_path,
+        _register_bucketed_table(
+            spark, bands_table, bands_path, band, band, num_buckets
         )
         return
-    if _has_legacy_files(index_path):
-        _migrate_legacy_index(spark, index_path, index_table, num_buckets)
-    else:
-        _register_bucketed_table(
-            spark, index_table, index_path, ("fp",), ("fp",), num_buckets
-        )
-    if not _data_files(bands_path) or _has_legacy_files(bands_path):
-        # orphaned/absent bands: backfill from the full index
-        if os.path.exists(bands_path):
-            shutil.rmtree(bands_path)
-        spark.sql(f"DROP TABLE IF EXISTS `{bands_table}`")
-        write_bucketed(
-            build_band_index(spark.table(index_table)), bands_table,
-            bucket_by=("band_idx", "band_hash"), num_buckets=num_buckets,
-            sort_by=("band_idx", "band_hash"), mode="append", path=bands_path,
-        )
-    else:
-        _register_bucketed_table(
-            spark,
-            bands_table,
-            bands_path,
-            ("band_idx", "band_hash"),
-            ("band_idx", "band_hash"),
-            num_buckets,
-        )
+    for p in (index_path, bands_path):
+        for stale in (p, *(p + s for s in _SWAP_SIBLINGS)):
+            if os.path.exists(stale):
+                shutil.rmtree(stale)
+    for t in (index_table, bands_table):
+        spark.sql(f"DROP TABLE IF EXISTS `{t}`")
+    full = build_dedup_index(
+        spark.read.parquet(corpus_path), text_col=text_col, id_col=id_col
+    ).localCheckpoint(eager=True)
+    write_bucketed(
+        full, index_table, bucket_by=fp, num_buckets=num_buckets,
+        sort_by=fp, mode="append", path=index_path,
+    )
+    write_bucketed(
+        build_band_index(full), bands_table, bucket_by=band,
+        num_buckets=num_buckets, sort_by=band, mode="append", path=bands_path,
+    )
 
 
 def dedup_ingest_sink(
@@ -517,11 +439,11 @@ def dedup_ingest_sink(
        cross-side LSH candidates verified with exact Jaccard);
     3. append the survivors.
 
-    Exactly-once under epoch replay BY CONSTRUCTION (round-9 fix: the
-    fingerprint-duplicate argument held only when the index append
-    landed — a crash between the corpus and index appends used to make
-    the replay re-append the whole epoch): every write goes through
-    the epoch staging protocol (``_epoch_begin`` / ``_publish_staged``
+    Exactly-once under epoch replay BY CONSTRUCTION, not by the
+    fingerprint-duplicate argument (that holds only once the index
+    append has landed — a crash between the corpus and index appends
+    would make the replay re-append the whole epoch): every write goes
+    through the epoch staging protocol (``_epoch_begin`` / ``_publish_staged``
     — stage dir, log target names, move), so a completed epoch's
     replay is skipped outright and a crashed attempt's partial files
     are rolled back before the recompute.
@@ -544,13 +466,7 @@ def dedup_ingest_sink(
     moves. That is what keeps epoch cost ~ batch size as the corpus
     grows to 100 TB; pinned empirically by the epoch-flatness test in
     ``tests/test_streaming.py`` (per-epoch filesystem bytes read stay
-    ~flat while the corpus grows). An index written by an older version as plain parquet at
-    ``<path>__index`` is MIGRATED on the first post-upgrade epoch: the
-    legacy rows are rewritten through the bucketed writer (and a band
-    table is backfilled from them) before anything appends — appending
-    bucketed files into a directory that still holds non-bucket-named
-    legacy parts would poison every later bucketed scan with
-    'Invalid bucket file'.
+    ~flat while the corpus grows).
 
     SMALL-FILE control: each epoch's append adds up to
     ``index_buckets`` tiny files per index table; once a table's file
@@ -577,19 +493,19 @@ def dedup_ingest_sink(
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # exactly-once under foreachBatch's at-least-once replay
-        # (round-9 review: a crash between the corpus append and the
-        # index append used to orphan the epoch's fingerprints, so the
-        # replay re-appended every doc): completed epochs skip, crashed
-        # attempts roll back their recorded file-level writes first
+        # exactly-once under foreachBatch's at-least-once replay (a
+        # crash between the corpus append and the index append would
+        # orphan the epoch's fingerprints, so a plain replay re-appends
+        # every doc): completed epochs skip, crashed attempts roll back
+        # their recorded file-level writes first
         if not _epoch_begin(path, epoch_id, spark,
                             tables=(index_table, bands_table)):
             return
-        # cut lineage FIRST (round-14 review, the scrub sinks' idiom
-        # applied back here): batch_df feeds the exact-keeper semi-join,
-        # the LSH pair generation, the indexed incremental probe, and
-        # the final joins — without the cut, every downstream action
-        # re-drives the stream source scan per subtree
+        # cut lineage FIRST (the scrub sinks' idiom): batch_df feeds
+        # the exact-keeper semi-join, the LSH pair generation, the
+        # indexed incremental probe, and the final joins — without the
+        # cut, every downstream action re-drives the stream source scan
+        # per subtree
         batch_df = batch_df.localCheckpoint(eager=True)
         keepers = exact_groups(batch_df, text_col, id_col).select(
             F.col("keeper_id").alias(id_col)
@@ -600,7 +516,7 @@ def dedup_ingest_sink(
         # and tag them for the caller to release — chaining .select()
         # drops the tag attribute, and a long-running stream that never
         # releases them grows executor storage by ~5 cached frames per
-        # epoch (round-14 review)
+        # epoch
         near_pairs = minhash_lsh_dedup(
             batch, text_col=text_col, id_col=id_col, threshold=threshold
         )
@@ -614,15 +530,14 @@ def dedup_ingest_sink(
         # by the replay's rollback, and schema inference on an empty dir
         # fails identically on every retry — the stream would be stuck
         if _data_files(path):
-            # a crashed compaction/migration swap leaves the live
-            # index/bands dir missing with the complete copy stranded
-            # in `.compacting`/`.migrating` — restore BEFORE the
-            # tableExists gate below (round-12 review: with the tables
-            # still registered in this session _ensure_index_tables
-            # never ran, the index scanned a missing location and read
-            # empty, every duplicate was re-admitted, and the next
-            # append recreated the dir, orphaning the stranded copy
-            # until stale-cleanup deleted it). On restore, drop the
+            # a crashed compaction swap leaves the live index/bands
+            # dir missing with a complete copy in a swap sibling —
+            # restore BEFORE the tableExists gate below: with the
+            # tables still registered in this session
+            # _ensure_index_tables would not run, the index would scan
+            # a missing location and read empty, every duplicate would
+            # be re-admitted, and the next append would recreate the
+            # dir, orphaning the stranded copy. On restore, drop the
             # registration so _ensure_index_tables re-attaches fresh
             # metadata — the scrub sinks' own recovery idiom.
             for p, t in (
@@ -634,10 +549,9 @@ def dedup_ingest_sink(
             if not spark.catalog.tableExists(index_table) or not (
                 spark.catalog.tableExists(bands_table)
             ):
-                # repair/attach BEFORE the first append: legacy layout
-                # -> crash-safe bucketed rewrite; missing index (crashed
-                # swap) -> rebuild from corpus; already-bucketed files
-                # in a fresh session -> register, no rewrite
+                # repair/attach BEFORE the first append: missing files
+                # -> rebuild from corpus; files in a fresh session ->
+                # register, no rewrite
                 _ensure_index_tables(
                     spark, path, index_path, index_table,
                     bands_path, bands_table, index_buckets,
@@ -663,8 +577,8 @@ def dedup_ingest_sink(
         # bucketed write recomputed past persist() and appended nothing).
         batch = batch.localCheckpoint(eager=True)
         # survivors are materialized — release the tagged per-epoch
-        # intermediates now (round-14 review: they were never released,
-        # leaking cached frames for the stream's lifetime)
+        # intermediates now, or they leak cached frames for the
+        # stream's lifetime
         unpersist_intermediates(near_pairs)
         if kept_flags is not None:
             unpersist_intermediates(kept_flags)
@@ -724,49 +638,23 @@ def keyed_state_sink(
     ``path`` (parquet), ordered by ``order_cols`` (ties broken by the
     later column(s); pass a unique tiebreak for determinism).
 
-    Crash-safe swap (round-9 review: the original rmtree-then-rename
-    left a window where a crash silently reset ALL keyed state to the
-    replayed batch alone): the replacement lands in a tmp dir, the
-    live dir is PARKED by rename (never deleted before the new copy is
-    live), and recovery at the next epoch restores the parked original
-    — or the completed replacement — before merging. Epoch replay is
-    naturally idempotent here (last-per-key of an already-merged batch
-    is a no-op), so restoring EITHER copy converges to the same state.
+    Crash-safe swap through :func:`_swap_dir` (deleting the live dir
+    before renaming the replacement in would leave a window where a
+    crash silently resets ALL keyed state to the replayed batch alone):
+    the live dir is never deleted before the new copy is live, and
+    recovery at the next epoch restores the completed replacement — or
+    the parked original — before merging. Epoch replay is naturally
+    idempotent here (last-per-key of an already-merged batch is a
+    no-op), so restoring EITHER copy converges to the same state.
     """
-    import glob as _glob
-
     order_by = [F.col(c).desc() for c in order_cols]
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # recover a crashed swap: live dir missing while the parked
-        # original (preferred: replay then applies the batch once) or
-        # the completed replacement is still on disk
-        if not os.path.exists(path):
-            for cand in sorted(_glob.glob(path + ".replaced-*")) + sorted(
-                _glob.glob(path + ".tmp-*")
-            ):
-                if os.path.isdir(cand):
-                    os.rename(cand, path)
-                    break
-        # stale siblings from completed or recovered swaps
-        for stale in _glob.glob(path + ".replaced-*") + _glob.glob(
-            path + ".tmp-*"
-        ):
-            shutil.rmtree(stale, ignore_errors=True)
-        current = None
-        if os.path.exists(path):
-            current = spark.read.parquet(path)
+        _recover_crashed_swap(path)
+        current = spark.read.parquet(path) if os.path.exists(path) else None
         merged = merge_latest(current, batch_df, keys, order_by)
-        tmp = f"{path}.tmp-{epoch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        parked = None
-        if os.path.exists(path):
-            parked = f"{path}.replaced-{epoch_id}"
-            os.rename(path, parked)
-        os.rename(tmp, path)
-        if parked:
-            shutil.rmtree(parked)
+        _swap_dir(path, merged.write.mode("overwrite").parquet)
 
     return handle
 
@@ -785,23 +673,20 @@ def _df_index_scrub_sink(
     min_df: int,
     index_buckets: int,
     compact_file_threshold: int | None,
-    audit_fn=None,
     index_min_df: int = 1,
 ):
     """ONE definition of the df-index scrub-sink epoch skeleton shared
-    by :func:`segment_scrub_sink` and :func:`span_scrub_sink` (round-10
-    review: the protocol was copy-pasted per sink and the
-    first-epoch-crash guard fix landed in the dedup sink but not the
-    copies — a single scaffold makes every protocol fix apply to all
+    by :func:`segment_scrub_sink` and :func:`span_scrub_sink` (a
+    per-sink copy of the protocol lets a fix land in one sink and not
+    the other — one scaffold makes every protocol fix apply to all
     sinks at once). Per epoch: exactly-once replay gate, lineage cut,
     ``batch_counts_fn(batch) -> (key_col, df)`` distinct-doc counts,
-    crashed-swap recovery, optional one-time ``audit_fn(spark,
-    index_path)``, cumulative df against the bucketed index, ``flagged
-    = cum_df >= min_df``, ``scrub_fn(batch, flagged) -> (doc_id,
-    __kept_text)``, staged corpus publish, bucketed count append,
-    complete mark, threshold compaction.
+    crashed-swap recovery, cumulative df against the bucketed index,
+    ``flagged = cum_df >= min_df``, ``scrub_fn(batch, flagged) ->
+    (doc_id, __kept_text)``, staged corpus publish, bucketed count
+    append, complete mark, threshold compaction.
 
-    ``index_min_df`` bounds the index (round-11): only keys whose
+    ``index_min_df`` bounds the index: only keys whose
     CUMULATIVE df has reached it persist — i.e. keys repeated within
     some single epoch, plus keys already in the index. Since most keys
     of a real corpus are singletons this shrinks the index by roughly
@@ -812,7 +697,7 @@ def _df_index_scrub_sink(
     single epoch never depends on the bound applied to THAT epoch's
     append (flagging precedes appending), so the one-epoch-run ==
     batch equivalence is exactly preserved. Default 1 = unbounded
-    (every key persists, the pre-round-11 behavior).
+    (every key persists).
 
     Crash-window guards (each pinned by a test on at least one sink):
     the standing-index branch keys on DATA FILES, not the directory —
@@ -825,8 +710,8 @@ def _df_index_scrub_sink(
         # (cum_df >= min_df) yet never persisted (cum_df <
         # index_min_df), so later single occurrences of a key the
         # corpus has already seen min_df times escape scrubbing —
-        # that's not a bounded index, it's a leaky one (round-12
-        # ADVICE). index_min_df <= min_df keeps the guarantee exact:
+        # that's not a bounded index, it's a leaky one.
+        # index_min_df <= min_df keeps the guarantee exact:
         # every key that ever flags is in the index from then on.
         raise ValueError(
             f"index_min_df={index_min_df} > min_df={min_df}: a flagged "
@@ -836,7 +721,6 @@ def _df_index_scrub_sink(
     index_path = f"{path}{index_suffix}"
     suffix = hashlib.md5(path.encode()).hexdigest()[:10]
     index_table = f"{table_prefix}_{suffix}"
-    audited = {"done": False}
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -860,9 +744,6 @@ def _df_index_scrub_sink(
         # scrubbed corpus), so the rename is the only lossless path
         if _recover_crashed_swap(index_path):
             spark.sql(f"DROP TABLE IF EXISTS `{index_table}`")
-        if audit_fn is not None and not audited["done"]:
-            audit_fn(spark, index_path)
-            audited["done"] = True
         if _data_files(index_path) and not spark.catalog.tableExists(
             index_table
         ):
@@ -939,15 +820,6 @@ def _df_index_scrub_sink(
             else index_buckets * 16
         )
         if limit and len(_data_files(index_path)) >= limit:
-            # re-audit (un-memoized) RIGHT BEFORE compaction: merging
-            # is the only event that can produce a MIXED-width file —
-            # per-file footer stats cannot prove a mixed file pure, so
-            # the per-file-purity invariant the fast audit relies on is
-            # enforced by refusing to merge a dir that fails the audit
-            # (e.g. a legacy index restored out-of-band after the
-            # first-epoch audit already ran)
-            if audit_fn is not None:
-                audit_fn(spark, index_path)
             _compact_bucketed_table(
                 spark, index_path, index_table,
                 (key_col,), (key_col,), index_buckets,
@@ -1007,8 +879,8 @@ def segment_scrub_sink(
     (they still block future dups by id); zero-token docs append with
     ``''`` too.
 
-    ``index_min_df`` (round-11, the span sink's scale lever made
-    symmetric): with 2, only segments whose cumulative df reached 2
+    ``index_min_df`` (the span sink's scale lever, made symmetric so
+    both scrub sinks bound their index the same way): with 2, only segments whose cumulative df reached 2
     persist — the index shrinks from one row per distinct corpus
     segment (~1/seg_words of the tokens) to one per REPEATED segment,
     trading away cross-epoch singleton pairs exactly as documented on
@@ -1057,150 +929,8 @@ def segment_scrub_sink(
         min_df=min_df,
         index_buckets=index_buckets,
         compact_file_threshold=compact_file_threshold,
-        audit_fn=_audit_seg_hash_width,
         index_min_df=index_min_df,
     )
-
-
-def _footer_stats_usable(st) -> bool:
-    """May the legacy-key audit trust this row group's footer stats to
-    PASS the file? Requires min/max AND a PRESENT null_count: an absent
-    null_count statistic (has_null_count False / null_count None) is
-    not the same as zero nulls — a file with NULL keys but clean 32-hex
-    min/max and no null_count stat must fall through to the
-    read-the-column confirmation, mirroring the width handling
-    (round-12 ADVICE)."""
-    return (
-        st is not None
-        and st.has_min_max
-        and st.has_null_count
-        and st.null_count is not None
-    )
-
-
-def _audit_seg_hash_width(spark, index_path: str) -> None:
-    """One legacy-key audit per handler lifetime (the index key changed
-    from a 16-hex md5 PREFIX to the full 32-hex digest; a prefix cannot
-    be extended back, so a pre-change index can never match new batch
-    hashes — its learned df counts would be silently orphaned and
-    stripping would regress). Detect and fail loudly; the one lossless
-    repair is re-counting from a raw (unscrubbed) corpus copy.
-
-    EVERY file is checked, never a sampled row (round-9 ADVICE: a mixed
-    dir passed or failed nondeterministically on .first()), but via
-    parquet FOOTER statistics — O(files) metadata reads instead of a
-    corpus-scale index scan on every stream (re)start (round-10
-    review). Per-file min/max value lengths identify the era exactly
-    because a parquet part is written whole by one writer version, so
-    a single file never mixes key widths — an invariant the scaffold
-    ENFORCES by re-running this audit immediately before every
-    compaction (the only operation that merges files; a mixed DIR is
-    caught while its files are still pure). Footer stats may only PASS
-    a file (pure 32-hex): for any other reported shape — missing
-    stats, all-null row groups, or ANY width other than exactly 32,
-    the legacy-looking 16 included — the audit reads just that file's
-    key column before accusing, because writers may truncate binary
-    min/max statistics and an odd stats width is not proof of odd
-    data (round-11 ADVICE + review). Failures are diagnosed per
-    CAUSE, each with its own repair path: confirmed 16-hex legacy
-    prefixes, pure or mixed in by a bad merge (rebuild from a raw
-    corpus copy), unexpected key widths or NULL keys
-    (corrupted/foreign files — quarantine), or a missing key column
-    (foreign data — remove); never an opaque TypeError/IndexError
-    (round-10 review) and never a legacy diagnosis for a corrupted
-    file (round-11 ADVICE)."""
-    files = _data_files(index_path)
-    if not files:
-        return
-    import pyarrow.parquet as pq
-
-    missing_col: list[str] = []
-    null_keys: list[str] = []
-    legacy: list[str] = []
-    foreign: dict[str, set[int]] = {}
-    for fn in sorted(files):
-        fpath = os.path.join(index_path, fn)
-        pf = pq.ParquetFile(fpath)
-        col_idx = pf.schema_arrow.get_field_index("seg_hash")
-        if col_idx < 0:
-            missing_col.append(fn)
-            continue
-        # a NON-STRING key (foreign file with e.g. an int64 seg_hash)
-        # must land in the foreign/quarantine diagnosis, not raise an
-        # opaque TypeError from len(int) (round-14 review); width -1 is
-        # the "not a string key" sentinel and never equals 16/32
-        def _key_width(v: object) -> int:
-            return len(v) if isinstance(v, (str, bytes)) else -1
-
-        lengths: set[int] = set()
-        has_nulls = False
-        stats_ok = True
-        for rg in range(pf.metadata.num_row_groups):
-            st = pf.metadata.row_group(rg).column(col_idx).statistics
-            if not _footer_stats_usable(st):
-                stats_ok = False
-                break
-            if st.null_count:
-                has_nulls = True
-            lengths.add(_key_width(st.min))
-            lengths.add(_key_width(st.max))
-        # Footer stats are a FAST PATH trusted only to PASS a file
-        # (pure 32-hex): a writer is allowed to TRUNCATE binary min/max
-        # statistics, so ANY other reported width — the legacy-looking
-        # 16 included; a truncated healthy file reports 16-char mins —
-        # may be a statistics artifact, not a data one (round-11
-        # ADVICE + review). Confirm from the key column itself before
-        # accusing the file; reading is the error path's cost only.
-        if not stats_ok or lengths != {32}:
-            col = pq.read_table(fpath, columns=["seg_hash"]).column(0)
-            vals = col.to_pylist()
-            has_nulls = any(v is None for v in vals)
-            lengths = {_key_width(v) for v in vals if v is not None}
-        if has_nulls:
-            null_keys.append(fn)
-        if 16 in lengths:
-            # any confirmed 16-wide key is an orphaned legacy prefix,
-            # whether the file is pure-legacy or mixed by a bad merge
-            legacy.append(fn)
-        if lengths - {16, 32}:
-            foreign[fn] = lengths - {16, 32}
-    problems = []
-    if legacy:
-        problems.append(
-            f"files {legacy[:3]} carry 16-hex (non-32-hex) seg_hash keys: "
-            "they predate the 128-bit key change and their counts can "
-            "never match new batches (a hash prefix is not recoverable "
-            "to the full digest) — rebuild the index by re-counting "
-            "segments from a raw corpus copy, or move the legacy index "
-            "aside explicitly if losing its counts is acceptable"
-        )
-    if foreign:
-        widths = sorted(set().union(*foreign.values()))
-        problems.append(
-            f"files {sorted(foreign)[:3]} carry non-32-hex seg_hash keys "
-            f"of widths {widths} (-1 = non-string key type): no version "
-            "of this sink ever wrote such keys — the files are corrupted "
-            "or foreign; quarantine them and re-count their epochs from "
-            "a raw corpus copy"
-        )
-    if null_keys:
-        problems.append(
-            f"files {null_keys[:3]} carry NULL seg_hash keys: the sink "
-            "never writes NULL keys — the files are corrupted writer "
-            "output; quarantine them and re-count their epochs from a "
-            "raw corpus copy"
-        )
-    if missing_col:
-        problems.append(
-            f"files {missing_col[:3]} lack the seg_hash column "
-            "entirely: not segment-index data — remove the foreign "
-            "files from the index directory"
-        )
-    if problems:
-        raise ValueError(
-            f"segment index audit failed at {index_path}: "
-            + "; ".join(problems)
-        )
 
 
 def span_scrub_sink(
@@ -1262,15 +992,15 @@ def span_scrub_sink(
     the df-lookup semi join READS the whole (narrow, bucketed) index,
     so per-epoch scan cost grows with the corpus.
 
-    ``index_min_df`` (round-11) is the scale lever for exactly that:
+    ``index_min_df`` is the scale lever for exactly that:
     with ``index_min_df=2`` only anchors whose cumulative df reached 2
     persist — anchors repeated within some epoch, plus anchors already
     indexed — so the index shrinks from one row per distinct corpus
     anchor to one per REPEATED anchor (~the boilerplate fraction;
     measured 20.8x smaller on the sf0.001 documents corpus — 1,115 of
     23,172 distinct anchors have df >= 2 — pinned by test at a
-    conservative >= 5x). Semantics under the bound, stated exactly: a one-epoch run
-    still equals batch ``scrub_repeated_spans`` (flagging precedes
+    conservative >= 5x). Semantics under the bound, stated exactly: a
+    one-epoch run still equals batch ``scrub_repeated_spans`` (flagging precedes
     appending, so an epoch's own output never depends on the bound),
     and within-epoch repeats are learned forever; what is given up is
     the cross-epoch SINGLETON pair — a span whose two occurrences
@@ -1282,8 +1012,8 @@ def span_scrub_sink(
     tested as a composition — bounded epochs containing a cross-epoch
     singleton, then one sweep, equals the all-at-once batch scrub
     (tests/test_streaming.py::
-    test_large_corpus_posture_bounded_sink_plus_batch_sweep,
-    round-11 verdict #3). Default 1 = the exact unbounded index.
+    test_large_corpus_posture_bounded_sink_plus_batch_sweep: the two
+    halves passing alone do not show that they compose). Default 1 = the exact unbounded index.
     ``index_min_df`` must be <= ``min_df`` (validated): a larger value
     would let a key flag without persisting, so later occurrences of
     an already-over-threshold key would escape scrubbing."""

@@ -215,17 +215,15 @@ def test_near_dup_gram_salt_in_grouping_key(skewed_vectors):
     """gram kernel: the salted path must group (shuffle) on (cell, i, j),
     so the salt bounds the per-task Arrow batch, not a post-shuffle
     filter."""
+    from insect_observation_data_pipeline_spark.plans.inspect import (
+        pandas_group_keys,
+    )
+
     salted = similarity.near_dup_pairs(
         skewed_vectors, threshold=0.35, max_cell_rows=10, kernel="gram"
     )
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
-    import re
-
-    m = re.search(r"FlatMapGroupsInPandas \[([^\]]*)\]", plan)
-    assert m and {"cell", "i", "j"} <= {
-        c.split("#")[0].strip() for c in m.group(1).split(",")
-    }, plan
+    keys = pandas_group_keys(salted)
+    assert keys and {"cell", "i", "j"} <= set(keys[0]), keys
 
 
 def test_lsh_multiprobe_recall(spark):

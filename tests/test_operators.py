@@ -140,6 +140,9 @@ def test_w2b_sketch_accuracy_and_plan(spark):
     register agg partial-aggregates map-side (the property that caps
     shuffle rows at 256/group at any scale)."""
     from insect_observation_data_pipeline_spark.functions import approx
+    from insect_observation_data_pipeline_spark.plans.inspect import (
+        aggregate_calls,
+    )
     from insect_observation_data_pipeline_spark.queries import QUERIES
     from insect_observation_data_pipeline_spark.sources.parquet import read_table
 
@@ -177,14 +180,10 @@ def test_w2b_sketch_accuracy_and_plan(spark):
     assert stats["mx"] <= 0.2, f"worst group error {stats['mx']:.3f} > 20%"
     assert stats["avg"] <= 0.08, f"mean error {stats['avg']:.3f} > 8%"
 
-    plan = (
-        QUERIES["w2b_best_month_sketch"](spark, sf)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "distinct" not in plan.lower()
-    assert "partial_max" in plan  # register agg combines map-side
+    calls = aggregate_calls(QUERIES["w2b_best_month_sketch"](spark, sf))
+    assert not any(distinct for _, _, distinct in calls), calls
+    # register agg combines map-side
+    assert ("Partial", "max", False) in calls, calls
 
 
 def test_merge_upsert_semantics(spark):
@@ -392,6 +391,7 @@ def test_band_join_matches_naive(spark):
     import pytest
 
     from insect_observation_data_pipeline_spark.operators.rangejoin import band_join
+    from insect_observation_data_pipeline_spark.plans.inspect import plan_flags
 
     lhs = spark.createDataFrame(
         [(i, v) for i, v in enumerate([0, 4, 5, 9, 10, 23, 100])],
@@ -427,9 +427,9 @@ def test_band_join_matches_naive(spark):
         {r["lid"] for r in lhs.collect()} - naive_matched
     )
 
-    plan = outer._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
+    flags = plan_flags(outer)
+    assert not flags["cartesian_product"]
+    assert not flags["broadcast_nested_loop_join"]
 
     with pytest.raises(ValueError):
         band_join(lhs, rhs, F.col("lv"), F.col("rv"), 5, how="full")

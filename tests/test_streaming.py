@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+
 from insect_observation_data_pipeline_spark.streaming import (
     read_events_stream,
     run_batch_backfill,
@@ -431,72 +433,15 @@ def test_dedup_ingest_sink_chain_blocks_across_epochs(spark, tmp_path):
     assert {r["doc_id"] for r in bands.select("doc_id").distinct().collect()} == {1, 4}
 
 
-def test_dedup_ingest_sink_migrates_legacy_plain_index(spark, tmp_path):
-    """Upgrade path: a corpus whose index was written by the
-    pre-bucketing sink as PLAIN parquet at <path>__index (no metastore
-    table) must keep working across MULTIPLE epochs. The first
-    post-upgrade epoch rewrites the legacy rows through the bucketed
-    writer — appending bucketed files next to legacy non-bucket-named
-    parts would make every later `spark.table(...)` scan throw
-    'Invalid bucket file' — and backfills the band table from the full
-    legacy index so near-dups of PRE-upgrade corpus docs are still
-    caught after the upgrade."""
-    import hashlib as _hl
-
-    from insect_observation_data_pipeline_spark.llm.dedup import build_dedup_index
-    from insect_observation_data_pipeline_spark.streaming import dedup_ingest_sink
-
-    a = "the quick brown fox jumps over the lazy dog again and again"
-    d = "nothing like anything else in this tiny stream at all honestly"
-    e = "completely fresh words appear within this next standalone entry"
-    corpus = str(tmp_path / "legacy_corpus")
-
-    # simulate the old sink version: corpus + plain-parquet index only
-    seed = spark.createDataFrame([(1, a)], "doc_id long, text string")
-    seed.write.parquet(corpus)
-    build_dedup_index(seed).write.parquet(f"{corpus}__index")
-
-    handle = dedup_ingest_sink(corpus, threshold=0.2)
-
-    def ids() -> set[int]:
-        return {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-
-    # epoch 0 (first post-upgrade): doc 2 is a NEAR-dup of legacy doc 1
-    # — only catchable through the band index backfilled from the
-    # migrated legacy rows; doc 3 is fresh and survives
-    handle(
-        spark.createDataFrame(
-            [(2, a + " with a tiny tail"), (3, d)],
-            "doc_id long, text string",
-        ),
-        0,
-    )
-    assert ids() == {1, 3}
-
-    # epoch 1 reads the migrated bucketed tables (the pre-fix failure
-    # mode: 'Invalid bucket file' on the second post-upgrade epoch)
-    handle(
-        spark.createDataFrame([(4, d), (5, e)], "doc_id long, text string"), 1
-    )
-    assert ids() == {1, 3, 5}
-
-    # index/band tables cover legacy + new rows alike
-    suffix = _hl.md5(corpus.encode()).hexdigest()[:10]
-    idx = spark.table(f"dedup_index_{suffix}")
-    bands = spark.table(f"dedup_bands_{suffix}")
-    assert {r["doc_id"] for r in idx.select("doc_id").collect()} == {1, 3, 5}
-    assert {r["doc_id"] for r in bands.select("doc_id").distinct().collect()} == {1, 3, 5}
-
-
 def test_dedup_ingest_sink_fresh_session_reattaches_without_rewrite(
     spark, tmp_path
 ):
     """A fresh Spark session has an EMPTY in-memory catalog, but the
     sink's bucketed files are already on disk. Re-attaching must be
     metadata-only — register the existing files as external bucketed
-    tables — not a full-index rewrite (round-6 ADVICE: keying the
-    migration on session-scoped tableExists re-ran the rewrite, and its
-    crash window, on every restart). Simulated by dropping the catalog
+    tables — not a full-index rewrite: the catalog is session-scoped,
+    so keying a rewrite on tableExists would re-run it, and its crash
+    window, on every restart. Simulated by dropping the catalog
     entries between epochs; the original data files must survive BY
     NAME and dedup must keep working."""
     import hashlib as _hl
@@ -534,13 +479,11 @@ def test_dedup_ingest_sink_fresh_session_reattaches_without_rewrite(
     assert {r["doc_id"] for r in idx.select("doc_id").collect()} == {1, 3}
 
 
-def test_dedup_ingest_sink_rebuilds_missing_index_from_corpus(
-    spark, tmp_path
-):
-    """Crash-window recovery: if the index directory is missing while
-    the corpus exists (the rename window of a crashed migration, or a
-    manual delete), the sink rebuilds index + bands FROM THE CORPUS —
-    the corpus is the source of truth and the index is always
+def _rebuilds_missing_index_from_corpus(spark, tmp_path, removed):
+    """Crash-window recovery: if either index directory is missing
+    while the corpus exists (a crashed swap with no complete copy left,
+    or a manual delete), the sink rebuilds index + bands FROM THE
+    CORPUS — the corpus is the source of truth and the index is always
     derivable, so no crash loses dedup state permanently."""
     import hashlib as _hl
     import shutil as _sh
@@ -555,8 +498,8 @@ def test_dedup_ingest_sink_rebuilds_missing_index_from_corpus(
         spark.createDataFrame([(1, a)], "doc_id long, text string"), 0
     )
     suffix = _hl.md5(corpus.encode()).hexdigest()[:10]
-    _sh.rmtree(f"{corpus}__index")
-    _sh.rmtree(f"{corpus}__bands")
+    for name in removed:
+        _sh.rmtree(f"{corpus}__{name}")
     spark.sql(f"DROP TABLE IF EXISTS `dedup_index_{suffix}`")
     spark.sql(f"DROP TABLE IF EXISTS `dedup_bands_{suffix}`")
 
@@ -575,40 +518,19 @@ def test_dedup_ingest_sink_rebuilds_missing_index_from_corpus(
     assert {r["doc_id"] for r in idx.select("doc_id").collect()} == {1, 4}
 
 
-def test_dedup_ingest_sink_migration_survives_stale_attempt(
+def test_dedup_ingest_sink_rebuilds_missing_index_from_corpus(
     spark, tmp_path
 ):
-    """A crashed previous migration leaves a stale `.migrating` (and
-    possibly `.legacy`) directory next to the still-legacy index; the
-    next attempt must clean them and migrate correctly — and at no
-    point before the swap is the legacy copy deleted."""
-    from insect_observation_data_pipeline_spark.llm.dedup import build_dedup_index
-    from insect_observation_data_pipeline_spark.streaming import dedup_ingest_sink
+    _rebuilds_missing_index_from_corpus(spark, tmp_path, ("index", "bands"))
 
-    a = "the quick brown fox jumps over the lazy dog again and again"
-    d = "nothing like anything else in this tiny stream at all honestly"
-    corpus = str(tmp_path / "stale_corpus")
-    seed = spark.createDataFrame([(1, a)], "doc_id long, text string")
-    seed.write.parquet(corpus)
-    build_dedup_index(seed).write.parquet(f"{corpus}__index")
-    # a crashed earlier attempt: half-written temp dir
-    (tmp_path / "stale_corpus__index.migrating").mkdir()
-    (tmp_path / "stale_corpus__index.migrating" / "junk").write_text("x")
 
-    handle = dedup_ingest_sink(corpus, threshold=0.2)
-    handle(
-        spark.createDataFrame(
-            [(2, a + " with a tiny tail"), (3, d)],
-            "doc_id long, text string",
-        ),
-        0,
-    )
-    got = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert got == {1, 3}
-    import os as _os
-
-    assert not _os.path.exists(f"{corpus}__index.migrating")
-    assert not _os.path.exists(f"{corpus}__index.legacy")
+@pytest.mark.parametrize("removed", ["index", "bands"])
+def test_dedup_ingest_sink_rebuilds_one_missing_index_dir(
+    spark, tmp_path, removed
+):
+    """Either dir missing alone takes the same rebuild of both tables;
+    a missing bands dir is not backfilled from the surviving index."""
+    _rebuilds_missing_index_from_corpus(spark, tmp_path, (removed,))
 
 
 def test_dedup_ingest_sink_recovers_from_crashed_compaction(spark, tmp_path):
@@ -616,8 +538,8 @@ def test_dedup_ingest_sink_recovers_from_crashed_compaction(spark, tmp_path):
     renames leaves the index dir MISSING, with the rewrite stranded in
     `.compacting` and possibly the old files in `.compacted-old`. On
     the next epoch (fresh session — simulated by dropping the
-    session-scoped tables) the sink must rebuild index+bands from the
-    corpus, sweep the stale compaction dirs, and keep deduping: an
+    session-scoped tables) the sink must restore the stranded index by
+    rename, sweep the stale compaction dirs, and keep deduping: an
     exact dup and a near-dup of pre-crash corpus docs are still
     rejected."""
     import hashlib as _hl
@@ -902,6 +824,10 @@ def test_incremental_indexed_pushes_candidate_ids_into_corpus_scan(
     from insect_observation_data_pipeline_spark.llm.dedup import (
         incremental_dedup_indexed,
     )
+    from insect_observation_data_pipeline_spark.plans.inspect import (
+        pushed_filters,
+        read_schema_columns,
+    )
     from insect_observation_data_pipeline_spark.streaming import dedup_ingest_sink
 
     corpus = str(tmp_path / "push_corpus")
@@ -926,19 +852,13 @@ def test_incremental_indexed_pushes_candidate_ids_into_corpus_scan(
         band_index=spark.table(f"dedup_bands_{suffix}"),
         candidate_pushdown=1000,
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the corpus scan is the only FileScan reading the text column
-    # (plan Location strings are truncated, so match by ReadSchema)
-    corpus_scans = [
-        line
-        for line in plan.splitlines()
-        if "FileScan parquet" in line and "text:string" in line
-    ]
-    assert corpus_scans, plan
+    # the corpus scan is the only file scan reading the text column
+    scans = read_schema_columns(out)
+    assert any("text" in cols for cols in scans), scans
+    corpus_filters = pushed_filters(out, reading="text")
     assert any(
-        ("In(doc_id" in line or "EqualTo(doc_id" in line)
-        for line in corpus_scans
-    ), corpus_scans
+        ("In(doc_id" in f or "EqualTo(doc_id" in f) for f in corpus_filters
+    ), corpus_filters
     # and the dedup verdict itself is unchanged by the pushdown
     got = {(r["doc_id"], r["keep"]) for r in out.collect()}
     assert got == {(9, False)}
@@ -1504,153 +1424,6 @@ def test_dedup_ingest_sink_recovers_swap_without_rebuild(spark, tmp_path):
     shutil.rmtree(path, ignore_errors=True)
 
 
-def test_segment_scrub_sink_rejects_legacy_16char_index(spark, tmp_path):
-    """An index written before the 128-bit key change (16-hex md5
-    PREFIX keys) can never match new 32-hex batch hashes — its learned
-    df counts would be silently orphaned. The sink must detect the
-    legacy key width on attach and fail loudly instead of quietly
-    regressing the scrub (round-8 ADVICE)."""
-    import os
-
-    import pytest
-
-    from insect_observation_data_pipeline_spark.streaming.sink import (
-        segment_scrub_sink,
-    )
-
-    path = str(tmp_path / "scrubbed_legacy")
-    # fabricate a legacy index: plausible (seg_hash, df) rows with
-    # 16-char prefix keys, laid down before the sink ever runs
-    legacy = spark.createDataFrame(
-        [("0123456789abcdef", 3), ("fedcba9876543210", 2)],
-        "seg_hash string, df long",
-    )
-    legacy.write.parquet(f"{path}__segdf")
-
-    handle = segment_scrub_sink(path, seg_words=4, min_df=2)
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")],
-        "doc_id long, text string",
-    )
-    with pytest.raises(ValueError, match="non-32-hex"):
-        handle(docs, 0)
-    # nothing may have appended past the failed audit
-    assert not os.path.exists(path)
-
-
-def test_segment_index_audit_branches_on_cause(spark, tmp_path):
-    """Round-11 ADVICE: the audit must diagnose each failure cause with
-    its own repair path — a corrupted/foreign file must NOT be told it
-    'predates the 128-bit key change' (the legacy prescription). Also
-    exercises the stats-distrust fallback: a width outside {16, 32} in
-    footer stats is confirmed from the key column before accusing."""
-    import pytest
-
-    from insect_observation_data_pipeline_spark.streaming.sink import (
-        _audit_seg_hash_width,
-    )
-
-    # NULL keys -> corrupted-writer diagnosis, not legacy
-    p = str(tmp_path / "idx_null")
-    spark.createDataFrame(
-        [(None, 3), ("0" * 32, 2)], "seg_hash string, df long"
-    ).coalesce(1).write.parquet(p)
-    with pytest.raises(ValueError, match="NULL seg_hash keys") as ei:
-        _audit_seg_hash_width(spark, p)
-    assert "predates" not in str(ei.value)
-
-    # missing key column -> foreign-data diagnosis
-    p = str(tmp_path / "idx_foreign_schema")
-    spark.createDataFrame(
-        [("a", 1)], "other string, df long"
-    ).coalesce(1).write.parquet(p)
-    with pytest.raises(ValueError, match="lack the seg_hash column") as ei:
-        _audit_seg_hash_width(spark, p)
-    assert "predates" not in str(ei.value)
-
-    # unexpected width (neither 16 nor 32) -> corrupted/foreign, with
-    # the explicit quarantine prescription; the footer stats report 24
-    # so this also walks the read-the-column confirmation fallback
-    p = str(tmp_path / "idx_width24")
-    spark.createDataFrame(
-        [("f" * 24, 1)], "seg_hash string, df long"
-    ).coalesce(1).write.parquet(p)
-    with pytest.raises(ValueError, match="corrupted or foreign") as ei:
-        _audit_seg_hash_width(spark, p)
-    assert "predates" not in str(ei.value)
-
-    # pure legacy still gets the legacy diagnosis + rebuild path
-    p = str(tmp_path / "idx_legacy")
-    spark.createDataFrame(
-        [("0123456789abcdef", 3)], "seg_hash string, df long"
-    ).coalesce(1).write.parquet(p)
-    with pytest.raises(ValueError, match="predate") as ei:
-        _audit_seg_hash_width(spark, p)
-    assert "non-32-hex" in str(ei.value)
-
-    # healthy index passes
-    p = str(tmp_path / "idx_ok")
-    spark.createDataFrame(
-        [("a" * 32, 1), ("b" * 32, 4)], "seg_hash string, df long"
-    ).coalesce(1).write.parquet(p)
-    _audit_seg_hash_width(spark, p)
-
-
-def test_segment_index_audit_distrusts_truncated_stats(
-    spark, tmp_path, monkeypatch
-):
-    """Round-11 review: footer stats may only PASS a file. A healthy
-    32-hex index whose writer truncated binary min/max statistics to 16
-    chars must NOT be accused of being legacy — the audit has to read
-    the key column and confirm before failing. (pyarrow 16 can't write
-    truncated stats, so the footer metadata is faked; read_table stays
-    real and sees the true 32-char keys.)"""
-    import pyarrow.parquet as pq
-
-    from insect_observation_data_pipeline_spark.streaming.sink import (
-        _audit_seg_hash_width,
-    )
-
-    p = str(tmp_path / "idx_truncstats")
-    spark.createDataFrame(
-        [("a" * 32, 1), ("b" * 32, 2)], "seg_hash string, df long"
-    ).coalesce(1).write.parquet(p)
-
-    real_pf = pq.ParquetFile
-
-    class _St:  # a truncated rendering of healthy 32-char keys
-        has_min_max = True
-        has_null_count = True
-        null_count = 0
-        min = "a" * 16
-        max = "b" * 16
-
-    class _Col:
-        statistics = _St()
-
-    class _RG:
-        def column(self, i):
-            return _Col()
-
-    class _Meta:
-        num_row_groups = 1
-
-        def row_group(self, i):
-            return _RG()
-
-    class FakePF:
-        def __init__(self, path):
-            self._real = real_pf(path)
-            self.metadata = _Meta()
-
-        @property
-        def schema_arrow(self):
-            return self._real.schema_arrow
-
-    monkeypatch.setattr(pq, "ParquetFile", FakePF)
-    _audit_seg_hash_width(spark, p)  # passes: the column read confirms 32
-
-
 def test_dedup_ingest_sink_exactly_once_under_replay(spark, tmp_path):
     """Round-9 fix, pinned: (a) a crash BETWEEN the corpus append and
     the index append no longer duplicates the epoch on replay — the
@@ -1750,10 +1523,11 @@ def test_segment_scrub_sink_replay_does_not_double_count_df(spark, tmp_path):
     assert "alpha beta gamma delta" not in got[3]  # stripped at df=2
 
 
-def test_keyed_state_sink_recovers_crashed_swap(spark, tmp_path):
-    """Round-9 fix, pinned: a crash between parking the live state dir
-    and renaming the replacement in must NOT reset keyed state — the
-    next epoch restores the parked original and merges on top."""
+def _keyed_state_recovers_crashed_swap(spark, tmp_path, survivor):
+    """A crash between parking the live state dir and renaming the
+    replacement in must NOT reset keyed state: the next epoch restores
+    whichever copy survives — the parked original (`.compacted-old`)
+    or the complete replacement (`.compacting`) — and merges on top."""
     import os
 
     from insect_observation_data_pipeline_spark.streaming.sink import (
@@ -1767,14 +1541,24 @@ def test_keyed_state_sink_recovers_crashed_swap(spark, tmp_path):
                               "k string, ts int, v string"),
         0,
     )
-    # simulate the crash window: live dir parked, replacement lost
-    os.rename(path, path + ".replaced-1")
+    # simulate the crash window: live dir missing, one copy survives
+    os.rename(path, path + survivor)
     handle(
         spark.createDataFrame([("b", 2, "vb2")], "k string, ts int, v string"),
         1,
     )
     got = {r["k"]: (r["ts"], r["v"]) for r in spark.read.parquet(path).collect()}
     assert got == {"a": (1, "va1"), "b": (2, "vb2")}, got
+
+
+def test_keyed_state_sink_recovers_crashed_swap(spark, tmp_path):
+    _keyed_state_recovers_crashed_swap(spark, tmp_path, ".compacted-old")
+
+
+def test_keyed_state_sink_recovers_crashed_swap_from_replacement(
+    spark, tmp_path
+):
+    _keyed_state_recovers_crashed_swap(spark, tmp_path, ".compacting")
 
 
 def test_dedup_ingest_sink_recovers_first_epoch_crash(spark, tmp_path):
@@ -2201,113 +1985,6 @@ def test_scrub_sinks_recover_first_epoch_index_crash(spark, tmp_path):
         assert got[1] == span + " tail0 tail1", maker.__name__
 
 
-def test_segment_audit_detects_legacy_via_footers(spark, tmp_path):
-    """The legacy 16-hex key audit must flag a mixed dir from parquet
-    FOOTER stats alone (O(files), no index scan) — including when only
-    SOME files are legacy — and pass a pure 32-hex index."""
-    import pytest
-
-    from insect_observation_data_pipeline_spark.streaming.sink import (
-        _audit_seg_hash_width,
-    )
-
-    idx = str(tmp_path / "seg__segdf")
-    good = spark.createDataFrame(
-        [("a" * 32, 1), ("b" * 32, 2)], "seg_hash string, df long"
-    )
-    good.coalesce(1).write.mode("overwrite").parquet(idx)
-    _audit_seg_hash_width(spark, idx)  # pure 32-hex: passes
-
-    legacy = spark.createDataFrame(
-        [("c" * 16, 3)], "seg_hash string, df long"
-    )
-    legacy.coalesce(1).write.mode("append").parquet(idx)
-    with pytest.raises(ValueError, match="non-32-hex"):
-        _audit_seg_hash_width(spark, idx)
-
-    # degenerate files must produce an actionable error, never an
-    # opaque TypeError/IndexError (round-10 review) — and since round
-    # 11 (ADVICE) each cause gets its OWN diagnosis instead of the
-    # legacy-rebuild prescription: all-NULL keys (footer stats absent
-    # -> fallback column read) and a file missing the key column
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    nulls = str(tmp_path / "nulls__segdf")
-    os.makedirs(nulls)
-    pq.write_table(
-        pa.table(
-            {"seg_hash": pa.array([None, None], pa.string()),
-             "df": pa.array([1, 2], pa.int64())}
-        ),
-        os.path.join(nulls, "part-00000-nulls.parquet"),
-    )
-    with pytest.raises(ValueError, match="NULL seg_hash keys"):
-        _audit_seg_hash_width(spark, nulls)
-
-    nocol = str(tmp_path / "nocol__segdf")
-    os.makedirs(nocol)
-    pq.write_table(
-        pa.table({"df": pa.array([1], pa.int64())}),
-        os.path.join(nocol, "part-00000-nocol.parquet"),
-    )
-    with pytest.raises(ValueError, match="lack the seg_hash column"):
-        _audit_seg_hash_width(spark, nocol)
-
-
-def test_compaction_reaudits_key_width(spark, tmp_path):
-    """The only operation that can MERGE index files is compaction; the
-    scaffold must re-run the key-width audit (un-memoized) right before
-    it, so a legacy file restored out-of-band AFTER the first-epoch
-    audit ran cannot be merged into a mixed-width file the footer audit
-    could no longer prove impure."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pytest
-
-    from insect_observation_data_pipeline_spark.streaming.sink import segment_scrub_sink
-
-    path = str(tmp_path / "scrubbed")
-    # threshold 1: every epoch triggers the compaction branch
-    handle = segment_scrub_sink(
-        path, seg_words=4, min_df=2, index_buckets=2,
-        compact_file_threshold=1,
-    )
-    handle(
-        spark.createDataFrame(
-            [(1, "alpha beta gamma delta epsilon zeta eta theta")],
-            "doc_id long, text string",
-        ),
-        0,
-    )  # first epoch: audit (empty dir) + append + compaction, all fine
-    # drop a legacy 16-hex file in OUT-OF-BAND, after the memoized
-    # first-epoch audit already ran; bucket-suffixed name so the
-    # bucketed scan accepts it (the dangerous case — a plain-named file
-    # would already fail the scan loudly as 'Invalid bucket file')
-    pq.write_table(
-        pa.table(
-            {"seg_hash": pa.array(["c" * 16], pa.string()),
-             "df": pa.array([3], pa.int64())}
-        ),
-        os.path.join(
-            path + "__segdf",
-            "part-99999-legacy_00000.c000.snappy.parquet",
-        ),
-    )
-    with pytest.raises(ValueError, match="non-32-hex"):
-        handle(
-            spark.createDataFrame(
-                [(2, "iota kappa lam mu nu xi omicron pi")],
-                "doc_id long, text string",
-            ),
-            1,
-        )
-
-
 def test_stateful_folds_drop_null_timestamps(spark):
     """Round-9 review fix, pinned: NaT event times must be DROPPED by
     the stateful folds — astype('int64') would turn them into int64
@@ -2357,31 +2034,6 @@ def test_bounded_index_rejects_min_df_incoherence(spark, tmp_path):
     # the boundary is fine: index_min_df == min_df persists exactly the
     # keys that can ever flag
     segment_scrub_sink(str(tmp_path / "ok"), min_df=2, index_min_df=2)
-
-
-def test_footer_stats_absent_null_count_not_trusted():
-    """The audit's fast path may only trust footer stats that carry a
-    PRESENT null_count: pyarrow returns None when has_null_count is
-    false, and `if st.null_count:` treated that like zero — a file with
-    NULL keys but clean 32-hex min/max and no null_count stat sailed
-    through without the confirming column read (round-12 ADVICE)."""
-    from insect_observation_data_pipeline_spark.streaming.sink import (
-        _footer_stats_usable,
-    )
-
-    class St:
-        def __init__(self, has_min_max, has_null_count, null_count):
-            self.has_min_max = has_min_max
-            self.has_null_count = has_null_count
-            self.null_count = null_count
-
-    assert _footer_stats_usable(St(True, True, 0))
-    assert _footer_stats_usable(St(True, True, 3))
-    assert not _footer_stats_usable(None)
-    assert not _footer_stats_usable(St(False, True, 0))
-    # the round-12 case: min/max present, null_count statistic absent
-    assert not _footer_stats_usable(St(True, False, None))
-    assert not _footer_stats_usable(St(True, True, None))
 
 
 def test_large_corpus_posture_bounded_sink_plus_batch_sweep(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Measured scale-up evidence: time queries across sf0.001/0.01/0.1.
 
-The 100 TB design claims in SURVEY/VERDICT are plan-shape arguments
+The 100 TB design claims in SURVEY.md are plan-shape arguments
 ("bounded fan-out", "one shuffle", "broadcast dim"). This harness turns
 them into NUMBERS: each query runs at three committed data scales (100x
 apart end to end) and the artifact records the wall-clock growth ratio
